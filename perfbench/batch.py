@@ -4,39 +4,29 @@ client.
 Each operation is ``pipeline.run_pipeline(spark, df, sink_path=...)`` over
 the same seeded table: full-struct decode with the extensions map, the Arrow
 boundary, persist, the salted shuffle and the partitioned parquet write,
-then the windowed counts.
-
-The traced run re-runs the job as cumulative prefixes built from the same
-public functions (scan, +decode, +enrich/route, +counts, +write_sinks), so
-each layer's share of the job is a difference of two wall times.
+then the windowed counts. After each job, outside its wall time, the sink
+directory is read back and its rows per sink are checked.
 """
 
 from __future__ import annotations
 
-import shutil
 import statistics
 import time
 
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from cefspark import pipeline
 
 import gen
-import layers
-from checks import check_batch
+import traced
+from checks import check_batch, check_sink
 from common import pctl, start_session
 
 ROWS = 100_000
 FILES = 8            # two scan splits per core
 TINY_ROWS = 4_000    # the warm-up operation that ends set-up
-# a traced run restarts the session twice: the warm-up operation after an
-# untraced and after a traced restart gives the tracing overhead
-TRACED_SETUPS = 3
 WARM_JOBS = 2        # full jobs after set-up, untimed: the JIT is still warming
 MIN_JOBS = 3
-TOP_K = 1_000        # above the sink count, so every sink is reported
-LAYER_BUDGET_S = 1.0
 
 
 def write_table(table, path, files: int) -> None:
@@ -46,57 +36,34 @@ def write_table(table, path, files: int) -> None:
         pq.write_table(table.slice(i * step, step), path / f"part-{i:03d}.parquet")
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _counts_report(routed) -> None:
-    """The report tail of ``run_pipeline``: materialized counts, scalars,
-    sink count and top sinks."""
-    counts = pipeline.sink_counts(routed).localCheckpoint(eager=True)
-    pipeline.counts_scalars(counts)
-    counts.select("sink_id").distinct().count()
-    (counts.groupBy("sink_id").agg(F.sum("n_events").alias("n"))
-     .orderBy(F.desc("n")).limit(TOP_K).collect())
-
-
 def run(ctx, rows: int = ROWS, tiny_rows: int = TINY_ROWS):
-    n_setups = TRACED_SETUPS if ctx.trace else 1
     t_gen = time.monotonic()
     table, expected = gen.batch_table(rows, ctx.seed)
     tiny, tiny_expected = gen.batch_table(tiny_rows, ctx.seed + 1)
     main_dir, tiny_dir = ctx.work / "in" / "main", ctx.work / "in" / "tiny"
     write_table(table, main_dir, FILES)
     write_table(tiny, tiny_dir, 1)
-    payloads = table.column("text").to_pylist()
+    payloads = table.column("text").to_pylist()[:traced.LAYER_ROWS] if ctx.trace else None
+    del table, tiny
     gen_s = time.monotonic() - t_gen
     sink = ctx.work / "sink"
     ops, tr = ctx.ops, ctx.tracer
 
     def job(spark, path, exp, name):
         return ops.run(name, lambda: pipeline.run_pipeline(
-            spark, spark.read.parquet(str(path)), sink_path=str(sink), top_k=TOP_K),
-            lambda r: check_batch(r, exp))
+            spark, spark.read.parquet(str(path)), sink_path=str(sink), top_k=traced.TOP_K),
+            lambda r: check_batch(r, exp) + check_sink([sink], exp))
 
-    # set-up runs from process start until the first warm-up job returns; a
-    # traced run then restarts the session untraced and traced
-    setups, spark = [], None
-    for k in range(n_setups):
-        traced = ctx.trace and k == n_setups - 1
-        t0 = time.monotonic()
-        with tr.span("session.start", setup=k):
-            spark = start_session(ctx.work, ctx.event_log if traced else None)
-        t_sess = time.monotonic() - t0
-        with tr.span("session.worker_boot", setup=k):
-            job(spark, tiny_dir, tiny_expected, f"setup{k}")
-        t1 = time.monotonic()
-        setups.append(t1 - t0 if k else t1 - ctx.t0 - gen_s)
-        if k == 0:
-            ctx.diag["session_start_cold_s"] = t_sess
-            ctx.diag["worker_boot_cold_s"] = t1 - t0 - t_sess
-        if k < n_setups - 1:
-            spark.stop()
-    ctx.spark = spark
+    # set-up runs from process start until the first warm-up job returns
+    t_a = time.monotonic()
+    with tr.span("session.start"):
+        spark = ctx.spark = start_session(ctx.work, ctx.event_log if ctx.trace else None)
+    t_b = time.monotonic()
+    with tr.span("session.worker_boot"):
+        job(spark, tiny_dir, tiny_expected, "setup")
+    t_c = time.monotonic()
+    setup_s = t_c - ctx.t0 - gen_s
+    ctx.diag.update({"session_start_s": t_b - t_a, "worker_boot_s": t_c - t_b})
 
     sc = spark.sparkContext
     sc.setJobGroup("warmup", "warmup")
@@ -106,71 +73,31 @@ def run(ctx, rows: int = ROWS, tiny_rows: int = TINY_ROWS):
     times = []
     t_start = time.monotonic()
     while time.monotonic() - t_start < ctx.seconds or len(times) < MIN_JOBS:
-        t = time.perf_counter()
         with tr.span("pipeline.run_pipeline"):
-            res = job(spark, main_dir, expected, f"job{len(times)}")
+            res, seconds = job(spark, main_dir, expected, f"job{len(times)}")
         if res is not None:
-            times.append(time.perf_counter() - t)
+            times.append(seconds)
         elif len(times) == 0 and ops.failed > 3:
             raise RuntimeError("batch jobs keep failing: " + "; ".join(ops.errors[:3]))
-    ctx.diag["jobs"] = len(times)
-    ctx.diag["job_s"] = [round(x, 4) for x in times]
     half = len(times) // 2
-    ctx.diag["job_s_first_half_p50"] = pctl(times[:max(1, half)], 0.5)
-    ctx.diag["job_s_second_half_p50"] = pctl(times[half:], 0.5)
-
+    ctx.diag.update({
+        "jobs": len(times), "job_s": [round(x, 4) for x in times],
+        "job_s_first_half_p50": pctl(times[:max(1, half)], 0.5),
+        "job_s_second_half_p50": pctl(times[half:], 0.5),
+        "latency_ms.p50": 1000 * pctl(times, 0.5),
+        "latency_ms.p90": 1000 * pctl(times, 0.9),
+    })
     metrics = {
-        "setup_s": (setups[0], "s"),
+        "setup_s": (setup_s, "s"),
         "events_per_s": (rows / pctl(times, 0.5), "events/s"),
         "latency_ms.mean": (1000 * statistics.fmean(times), "ms"),
     }
-    ctx.diag["latency_ms.p50"] = 1000 * pctl(times, 0.5)
-    ctx.diag["latency_ms.p90"] = 1000 * pctl(times, 0.9)
-    ctx.diag["setup_s_all"] = [round(x, 4) for x in setups]
-    if not ctx.trace:
-        return metrics
-
-    # --- traced: cumulative prefixes, then single-thread layer rates --------
-    df = spark.read.parquet(str(main_dir))
-    prefixes = [
-        ("scan", lambda: _noop(df)),
-        ("decode", lambda: _noop(pipeline.decode(df))),
-        ("enrich_route", lambda: _noop(pipeline.route(pipeline.enrich(
-            pipeline.decode(df), spark)))),
-        ("counts", lambda: _counts_report(pipeline.route(pipeline.enrich(
-            pipeline.decode(df), spark)))),
-        ("write_sinks", lambda: pipeline.run_pipeline(
-            spark, df, sink_path=str(sink), top_k=TOP_K)),
-    ]
-    wall = {}
-    for name, fn in prefixes:
-        sc.setJobGroup(f"prefix.{name}", name)
-        t = time.perf_counter()
-        with tr.span(f"prefix.{name}"):
-            fn()
-        wall[name] = time.perf_counter() - t
-    sc.setJobGroup("layers", "layers")
-    names = [n for n, _ in prefixes]
-    delta = {n: wall[n] - (wall[names[i - 1]] if i else 0.0) for i, n in enumerate(names)}
-    sink_files = [p for p in sink.rglob("*.parquet")]
-
-    with tr.span("layers.in_process"):
-        rates = layers.parser_rates(payloads[:10_000], LAYER_BUDGET_S)
-        relay = gen.relay_files(1, 2_000, ctx.seed)[0][0].column("text").to_pylist()
-        ts_rate = layers.timestamp_rate(layers.timestamp_values(relay), LAYER_BUDGET_S)
-        enc_rate = layers.encoder_rate(
-            layers.encode_input(layers.decode(payloads[:10_000])), LAYER_BUDGET_S)
-    ctx.layer_rates = dict(parser=rates, timestamps=ts_rate, encoder=enc_rate,
-                           failed_rows=layers.failed_rows(payloads[:10_000]))
-    # coverage compares the chain with the traced job that ran just before it:
-    # jobs still speed up run over run, so an earlier median would not match
-    ctx.batch_trace = dict(
-        rows=rows, jobs=len(times), job_wall_s=times[-1],
-        prefix_wall=wall, prefix_delta=delta,
-        setup_untraced_s=setups[-2], setup_traced_s=setups[-1],
-        session_start_s=ctx.diag["session_start_cold_s"],
-        worker_boot_s=ctx.diag["worker_boot_cold_s"],
-        sink_files=len(sink_files),
-        sink_bytes=sum(p.stat().st_size for p in sink_files))
-    shutil.rmtree(sink, ignore_errors=True)
+    if ctx.trace:
+        sc.setJobGroup("probe", "probe")
+        ctx.layers = dict(
+            op_group="job", ops=len(times), op_rows=rows * len(times),
+            decode_mode="v1_full", udfs=("decode_cef", "other"),
+            chain=traced.prefix_chain(ctx, spark, [main_dir], expected),
+            stream=traced.stream_pass(ctx, spark, main_dir, expected),
+            rates=traced.layer_rates(ctx, payloads, traced.relay_texts(ctx.seed, 2_000)))
     return metrics

@@ -5,7 +5,13 @@ check counts the operation as failed."""
 from __future__ import annotations
 
 import random
+import time
 from collections import Counter, defaultdict
+
+import pyarrow.dataset as ds
+
+# re-encoded rows per relay file whose headers are decoded back and compared
+RELAY_SAMPLE = 200
 
 
 class Ops:
@@ -25,18 +31,24 @@ class Ops:
 
     def run(self, name: str, fn, check):
         """Call ``fn``; an exception or a failed ``check(result)`` fails the
-        operation. Returns the result, or None when the call raised."""
+        operation. Returns ``(result, seconds)``: the result is None when
+        the call raised, and ``seconds`` is the call's wall time, which
+        leaves the check out."""
+        t = time.perf_counter()
         try:
             res = fn()
         except Exception as e:  # noqa: BLE001 - a failed operation is data
             self.record(name, [f"raised {type(e).__name__}: {str(e)[:300]}"])
-            return None
+            return None, time.perf_counter() - t
+        seconds = time.perf_counter() - t
         self.record(name, check(res))
-        return res
+        return res, seconds
 
 
 def check_batch(res, expected: dict) -> list[str]:
-    """``pipeline.run_pipeline``'s report against the generator's counts."""
+    """``pipeline.run_pipeline``'s report against the generator's counts.
+    The report is computed from the routed frame, not from the files written,
+    so a job with a sink path is also checked with :func:`check_sink`."""
     errs = []
     if res.n_input != expected["n_input"]:
         errs.append(f"n_input {res.n_input} != {expected['n_input']}")
@@ -49,6 +61,30 @@ def check_batch(res, expected: dict) -> list[str]:
         bad = sorted(set(got.items()) ^ set(expected["sinks"].items()))[:4]
         errs.append(f"per-sink counts differ: {bad}")
     return errs
+
+
+def sink_counts(*paths) -> Counter:
+    """Rows per ``sink_id`` in parquet directories, read back with pyarrow:
+    ``sink_id`` is either a column or a hive partition (``sink_id=<v>/``)."""
+    out: Counter = Counter()
+    for path in paths:
+        table = ds.dataset(str(path), format="parquet", partitioning="hive").to_table(
+            columns=["sink_id"])
+        out.update(table.column("sink_id").to_pylist())
+    return out
+
+
+def check_sink(paths: list, expected: dict) -> list[str]:
+    """The rows written under ``paths``, per sink, against the generator's
+    counts: a lost, duplicated or misrouted row fails the operation."""
+    try:
+        got = sink_counts(*paths)
+    except (OSError, ValueError) as e:  # no files, unreadable files
+        return [f"sink unreadable: {type(e).__name__}: {str(e)[:200]}"]
+    if got != Counter(expected["sinks"]):
+        bad = sorted(set(got.items()) ^ set(expected["sinks"].items()))[:4]
+        return [f"sink files differ per sink: {bad}"]
+    return []
 
 
 def cef_headers(line: str) -> list[str]:
@@ -74,7 +110,7 @@ def cef_headers(line: str) -> list[str]:
 
 
 def check_relay(snapshots: list[dict], rows_by_snapshot: dict, files: list,
-                failure_sink: str, seed: int, sample: int = 200):
+                failure_sink: str, seed: int):
     """Per-file checks of a relay feed.
 
     ``snapshots`` are manifest dicts; ``rows_by_snapshot[snapshot_id]`` holds
@@ -113,7 +149,7 @@ def check_relay(snapshots: list[dict], rows_by_snapshot: dict, files: list,
             elif label is None:
                 if cols["sink_id"][j] != failure_sink:
                     bad_rows[fi].append(f"{cid} routed to {cols['sink_id'][j]}")
-            elif rng.random() < sample / max(1, len(files[fi][1])):
+            elif rng.random() < RELAY_SAMPLE / max(1, len(files[fi][1])):
                 hdr = cef_headers(cols["cef_line"][j] or "")
                 if not hdr or (hdr[1], hdr[6]) != label:
                     bad_rows[fi].append(f"{cid} re-encoded as {hdr[1:7:5]} not {label}")

@@ -17,10 +17,9 @@ from contextlib import contextmanager
 from pathlib import Path
 
 CORES = 4
-# The driver JVM's heap, fixed (-Xms = -Xmx, a common production setting):
-# a heap that grows on demand makes the JVM's resident size vary from run
-# to run with GC timing.
-DRIVER_MEM = "2g"
+RSS_PERIOD_S = 0.2        # memory sample period
+TREE_REFRESH_S = 1.0      # how often the process tree is re-listed
+STOP_TIMEOUT_S = 60.0     # wait for the JVM and its workers to exit
 
 
 # --- statistics ---------------------------------------------------------------
@@ -55,11 +54,13 @@ class Tracer:
             self._stack.ids = []
         return self._stack.ids
 
-    def add(self, name: str, start: float, end: float, parent=None, **attrs) -> int:
+    def add(self, name: str, start: float, end: float, **attrs) -> int:
+        """A span timed elsewhere (for example from Spark's query progress),
+        with no parent."""
         with self._lock:
             sid = next(self._ids)
             self.spans.append(dict(id=sid, name=name, start=start, end=end,
-                                   parent=parent, run=self.run_id, **attrs))
+                                   parent=None, run=self.run_id, **attrs))
         return sid
 
     @contextmanager
@@ -132,49 +133,61 @@ def descendants(root: int) -> list[int]:
 _PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
-def rss_bytes(pids) -> int:
-    """Summed resident size. Python processes count their proportional share
-    (PSS): the forked workers share most pages with the daemon, and summing
-    plain RSS would count those once per worker. The JVM counts plain RSS,
-    which shares nothing here and is cheap to read (its PSS read takes
-    ~20 ms and holds the JVM's memory-map lock)."""
-    total = 0
+def _comm_ppid(pid: int) -> tuple[str, int]:
+    with open(f"/proc/{pid}/stat") as f:
+        stat = f.read()
+    head, tail = stat.rsplit(")", 1)
+    return head.split("(", 1)[1], int(tail.split()[1])
+
+
+def rss_bytes(pids, root: int) -> tuple[int, int]:
+    """Resident size of the driver JVM and of the Python processes, each
+    summed. The driver JVM is the ``java`` child of ``root``; processes the
+    JVM starts for a moment (shell commands, spawn helpers) are skipped,
+    since a child that shares the JVM's memory would count it twice. Python
+    processes count their proportional share (PSS): the forked workers share
+    most pages with the daemon, and summing plain RSS would count those once
+    per worker. The JVM counts plain RSS, which shares nothing here and is
+    cheap to read (its PSS read takes ~20 ms and holds the JVM's memory-map
+    lock)."""
+    jvm = python = 0
     for pid in pids:
         try:
-            with open(f"/proc/{pid}/comm") as f:
-                java = f.read().strip() == "java"
-            if java:
+            comm, ppid = _comm_ppid(pid)
+            if comm == "java" and ppid == root:
                 with open(f"/proc/{pid}/statm") as f:
-                    total += int(f.read().split()[1]) * _PAGE
-                continue
-            with open(f"/proc/{pid}/smaps_rollup") as f:
-                for line in f:
-                    if line.startswith("Pss:"):
-                        total += int(line.split()[1]) * 1024
-                        break
+                    jvm += int(f.read().split()[1]) * _PAGE
+            elif comm.startswith("python"):
+                with open(f"/proc/{pid}/smaps_rollup") as f:
+                    for line in f:
+                        if line.startswith("Pss:"):
+                            python += int(line.split()[1]) * 1024
+                            break
         except OSError:
             continue
-    return total
+    return jvm, python
 
 
 class RssSampler:
-    """Background thread sampling the summed resident size of this process and its
-    descendants (driver JVM, Python workers) every ``period`` seconds; the
-    process tree itself is re-read every ``refresh`` seconds."""
+    """Background thread sampling the summed resident size of this process
+    and its descendants (driver JVM, Python workers) every ``RSS_PERIOD_S``;
+    the process tree itself is re-read every ``TREE_REFRESH_S``."""
 
-    def __init__(self, period: float = 0.2, refresh: float = 1.0):
-        self.period, self.refresh = period, refresh
-        self.peak = 0
+    def __init__(self):
+        self.peak = self.peak_jvm = self.peak_python = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, name="rss", daemon=True)
 
     def _loop(self):
         me, pids, listed = os.getpid(), [], 0.0
         while not self._stop.is_set():
-            if time.monotonic() - listed >= self.refresh:
-                pids, listed = [me, *descendants(me)], time.monotonic()
-            self.peak = max(self.peak, rss_bytes(pids))
-            self._stop.wait(self.period)
+            if time.monotonic() - listed >= TREE_REFRESH_S:
+                pids, listed = descendants(me), time.monotonic()
+            jvm, python = rss_bytes([me, *pids], me)
+            self.peak = max(self.peak, jvm + python)
+            self.peak_jvm = max(self.peak_jvm, jvm)
+            self.peak_python = max(self.peak_python, python)
+            self._stop.wait(RSS_PERIOD_S)
 
     def __enter__(self):
         self._thread.start()
@@ -235,8 +248,8 @@ def start_session(work: Path, event_log: Path | None = None):
         "spark.sql.warehouse.dir": str(work / "warehouse"),
         "spark.local.dir": str(work / "local"),
         # -XX:-UsePerfData: the JVM would otherwise keep a file under /tmp
-        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:-UsePerfData "
-                                         f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
+        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -Djava.io.tmpdir={tmp} "
+                                         f"-Dderby.system.home={tmp}",
     }
     if event_log is not None:
         event_log.mkdir(parents=True, exist_ok=True)
@@ -251,7 +264,7 @@ def start_session(work: Path, event_log: Path | None = None):
     return spark
 
 
-def shutdown_spark(spark, timeout: float = 60.0) -> None:
+def shutdown_spark(spark) -> None:
     """Stop the session, then the gateway JVM, and wait until the JVM and
     every process it started (the Python worker daemon) have exited."""
     from pyspark import SparkContext
@@ -269,13 +282,13 @@ def shutdown_spark(spark, timeout: float = 60.0) -> None:
         if proc is not None:
             proc.stdin.close()  # the gateway exits on EOF
             try:
-                proc.wait(timeout=timeout)
+                proc.wait(timeout=STOP_TIMEOUT_S)
             except Exception:  # noqa: BLE001 - subprocess.TimeoutExpired
                 proc.kill()
-                proc.wait(timeout=timeout)
+                proc.wait(timeout=STOP_TIMEOUT_S)
         SparkContext._gateway = None
         SparkContext._jvm = None
-    deadline = time.time() + timeout
+    deadline = time.time() + STOP_TIMEOUT_S
     while True:
         alive = [p for p in pids if os.path.exists(f"/proc/{p}")
                  and not _is_zombie(p)]
@@ -287,7 +300,7 @@ def shutdown_spark(spark, timeout: float = 60.0) -> None:
                     os.kill(p, signal.SIGKILL)
                 except OSError:
                     pass
-            deadline = time.time() + timeout
+            deadline = time.time() + STOP_TIMEOUT_S
         time.sleep(0.05)
 
 

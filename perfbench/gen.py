@@ -194,3 +194,12 @@ def relay_files(n_files: int, rows_per_file: int, seed: int, first_index: int = 
             conv.append(cid)
         out.append((_table(conv, texts, fi * n), labels))
     return out
+
+
+def relay_expected(labels: list[dict]) -> dict:
+    """Expected outputs of a batch job over relay files, from their labels:
+    the same shape as :func:`batch_table`'s ``expected``."""
+    sinks = Counter(FAILURE_SINK if lab is None else sink_of(*lab)
+                    for per_file in labels for lab in per_file.values())
+    return {"n_input": sum(len(per_file) for per_file in labels),
+            "n_failed": sinks[FAILURE_SINK], "sinks": dict(sinks)}

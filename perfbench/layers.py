@@ -40,25 +40,29 @@ _TS_FIELD = re.compile(r"\b(rt|start|end)=(.*?) (?=\w+=)")
 _DTZ = re.compile(r"\bdtz=(\S+)")
 
 
-def timed_rate(fn, n_items: int, budget_s: float, min_calls: int = 3) -> float:
+BUDGET_S = 1.0   # each rate loops for this long
+MIN_CALLS = 3
+
+
+def timed_rate(fn, n_items: int) -> float:
     """Items per second from the median call of repeated calls."""
     times = []
-    deadline = time.perf_counter() + budget_s
-    while len(times) < min_calls or time.perf_counter() < deadline:
+    deadline = time.perf_counter() + BUDGET_S
+    while len(times) < MIN_CALLS or time.perf_counter() < deadline:
         t = time.perf_counter()
         fn()
         times.append(time.perf_counter() - t)
     return n_items / statistics.median(times)
 
 
-def parser_rates(payloads: list[str], budget_s: float) -> dict[str, float]:
+def parser_rates(payloads: list[str]) -> dict[str, float]:
     s = pd.Series(payloads, dtype=object)
     cases = {
         "v1_full": lambda: decode_batch(s, None, columns=FULL_COLUMNS),
         "v1_routing": lambda: decode_batch(s, None, columns=ROUTING_ORDERED),
         "ecs_ts": lambda: decode_batch(s, ECS_CONFIG, columns=FULL_COLUMNS),
     }
-    return {k: timed_rate(fn, len(s), budget_s) for k, fn in cases.items()}
+    return {k: timed_rate(fn, len(s)) for k, fn in cases.items()}
 
 
 def decode(payloads: list[str], config=None) -> pd.DataFrame:
@@ -80,13 +84,13 @@ def timestamp_values(relay_texts: list[str]) -> list[tuple[str, str]]:
     return out
 
 
-def timestamp_rate(values: list[tuple[str, str]], budget_s: float) -> float:
+def timestamp_rate(values: list[tuple[str, str]]) -> float:
     norm = TimestampNormalizer(now=gen.RELAY_NOW)
 
     def run():
         for v, z in values:
             norm.normalize_iso(v, z)
-    return timed_rate(run, len(values), budget_s)
+    return timed_rate(run, len(values))
 
 
 def encode_input(decoded: pd.DataFrame) -> pd.DataFrame:
@@ -99,6 +103,5 @@ def encode_input(decoded: pd.DataFrame) -> pd.DataFrame:
     return ev
 
 
-def encoder_rate(events: pd.DataFrame, budget_s: float) -> float:
-    return timed_rate(lambda: encode_batch(events, ENCODER_CONFIG), len(events),
-                      budget_s)
+def encoder_rate(events: pd.DataFrame) -> float:
+    return timed_rate(lambda: encode_batch(events, ENCODER_CONFIG), len(events))

@@ -1,4 +1,4 @@
-"""``relay_stream``: an open loop at 5,000 events/s.
+"""``relay_stream``: an open loop at 2,500 events/s.
 
 A generator thread drops one seeded parquet file per second into a
 directory. The query runs ``streaming.read_transcript_stream`` and
@@ -12,7 +12,6 @@ of the snapshot that holds it, so a stall also delays every later file.
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import statistics
@@ -25,41 +24,18 @@ from cefspark import storage, streaming, udfs
 
 import gen
 import layers
+import traced
 from checks import check_relay
 from common import pctl, start_session
 
-RATE = 5_000                 # events/s
+RATE = 2_500                 # events/s
 PERIOD_S = 1.0               # one file per period
 FILE_ROWS = int(RATE * PERIOD_S)
-WARM_FILES = 8               # fed before the measured files; not measured
+WARM_FILES = 5               # fed before the measured files; not measured
 TINY_ROWS = 500              # the warm-up file that ends set-up
-# a traced run restarts the session twice: the warm-up operation after an
-# untraced and after a traced restart gives the tracing overhead
-TRACED_SETUPS = 3
+CHAIN_FILES = 8              # relay files the traced prefix chain reads
 COMMIT_TIMEOUT_S = 60.0
-LAYER_BUDGET_S = 1.0
 SINK_COLUMNS = ["conv_id", "turn_idx", "sink_id", "cef_line"]
-
-
-class TimedTable:
-    """Timing proxy around ``ManifestTable.commit`` and
-    ``ManifestTable.consumed_inputs``: the two calls the exactly-once sink
-    makes per micro-batch. Everything else passes through."""
-
-    def __init__(self, table, tracer):
-        self._table = table
-        self._tracer = tracer
-
-    def commit(self, *args, **kwargs):
-        with self._tracer.span("storage.commit"):
-            return self._table.commit(*args, **kwargs)
-
-    def consumed_inputs(self):
-        with self._tracer.span("storage.ledger"):
-            return self._table.consumed_inputs()
-
-    def __getattr__(self, name):
-        return getattr(self._table, name)
 
 
 def build_query(spark, d, table, name: str):
@@ -128,46 +104,38 @@ class Feeder(threading.Thread):
 
 def run(ctx, file_rows: int = FILE_ROWS, warm_files: int = WARM_FILES,
         tiny_rows: int = TINY_ROWS):
-    n_setups = TRACED_SETUPS if ctx.trace else 1
     t_gen = time.monotonic()
     n_feed = warm_files + round(ctx.seconds / PERIOD_S)
-    tiny_sets = [gen.relay_files(1, tiny_rows, ctx.seed + 1 + k)[0] for k in range(n_setups)]
-    feed = gen.relay_files(n_feed, file_rows, ctx.seed, first_index=1)
-    dirs = [ctx.work / f"relay{k}" for k in range(n_setups)]
-    for d in dirs:
-        for sub in ("in", "stage"):
-            (d / sub).mkdir(parents=True)
-    for k, d in enumerate(dirs):
-        os.rename(d / "stage" / stage_file(tiny_sets[k][0], d, 0), d / "in" / "f00000.parquet")
-    main = dirs[-1]
-    names = [stage_file(tb, main, 1 + i) for i, (tb, _) in enumerate(feed)]
+    d = ctx.work / "relay"
+    for sub in ("in", "stage"):
+        (d / sub).mkdir(parents=True)
+    tiny, tiny_labels = gen.relay_files(1, tiny_rows, ctx.seed + 1)[0]
+    os.rename(d / "stage" / stage_file(tiny, d, 0), d / "in" / "f00000.parquet")
+    names, labels, texts = [], [tiny_labels], []
+    for i, (tb, lab) in enumerate(gen.relay_files(n_feed, file_rows, ctx.seed, first_index=1)):
+        names.append(stage_file(tb, d, 1 + i))
+        labels.append(lab)
+        if ctx.trace and i < 2:
+            texts += tb.column("text").to_pylist()
+    del tiny, tb
     gen_s = time.monotonic() - t_gen
     ops, tr = ctx.ops, ctx.tracer
 
-    setups, spark, query = [], None, None
-    for k, d in enumerate(dirs):
-        traced = ctx.trace and k == n_setups - 1
-        t0 = time.monotonic()
-        with tr.span("session.start", setup=k):
-            spark = start_session(ctx.work, ctx.event_log if traced else None)
-        t_sess = time.monotonic() - t0
-        table = storage.ManifestTable(str(d / "table"))
-        if traced:
-            table = TimedTable(table, tr)
-        with tr.span("session.worker_boot", setup=k):
-            query = build_query(spark, d, table, f"relay{k}")
-            ops.run(f"setup{k}", lambda: wait_rows(query, d / "table", tiny_rows,
-                                                   COMMIT_TIMEOUT_S), lambda _: [])
-        t1 = time.monotonic()
-        setups.append(t1 - t0 if k else t1 - ctx.t0 - gen_s)
-        if k == 0:
-            ctx.diag["session_start_cold_s"] = t_sess
-            ctx.diag["worker_boot_cold_s"] = t1 - t0 - t_sess
-        if k < n_setups - 1:
-            query.stop()
-            spark.stop()
-    ctx.spark = spark
-    ctx.diag["setup_s_all"] = [round(x, 4) for x in setups]
+    # set-up runs from process start until the set-up file is committed
+    t_a = time.monotonic()
+    with tr.span("session.start"):
+        spark = ctx.spark = start_session(ctx.work, ctx.event_log if ctx.trace else None)
+    t_b = time.monotonic()
+    table = storage.ManifestTable(str(d / "table"))
+    if ctx.trace:
+        table = traced.TimedTable(table, tr)
+    with tr.span("session.worker_boot"):
+        query = build_query(spark, d, table, "relay")
+        ops.run("setup", lambda: wait_rows(query, d / "table", tiny_rows, COMMIT_TIMEOUT_S),
+                lambda _: [])
+    t_c = time.monotonic()
+    setup_s = t_c - ctx.t0 - gen_s
+    ctx.diag.update({"session_start_s": t_b - t_a, "worker_boot_s": t_c - t_b})
 
     # warm-up files, drained, so every measured feed starts from an empty
     # queue; then the measured files, one per period
@@ -175,92 +143,69 @@ def run(ctx, file_rows: int = FILE_ROWS, warm_files: int = WARM_FILES,
     feeders = []
     for part, rows_after in ((names[:warm_files], tiny_rows + warm_files * file_rows),
                              (names[warm_files:], total)):
-        feeders.append(Feeder(main, part, time.time() + 0.1))
+        feeders.append(Feeder(d, part, time.time() + 0.1))
         feeders[-1].start()
         feeders[-1].join()
         try:
-            wait_rows(query, main / "table", rows_after, COMMIT_TIMEOUT_S)
+            wait_rows(query, d / "table", rows_after, COMMIT_TIMEOUT_S)
         except (RuntimeError, TimeoutError) as e:
             ops.record("drain", [str(e)])
     feeder = feeders[-1]
-    progress = [json.loads(p.json) if hasattr(p, "json") else p
-                for p in query.recentProgress]
+    # batch 0 is the set-up file
+    stream = traced.stream_record(tr, query, first_batch=1) if ctx.trace else None
     query.stop()
 
-    snaps, rows = read_snapshots(main / "table")
-    files = [(tiny_rows, tiny_sets[-1][1])] + [(file_rows, lab) for _, lab in feed]
+    snaps, rows = read_snapshots(d / "table")
+    files = [(tiny_rows, labels[0])] + [(file_rows, lab) for lab in labels[1:]]
     file_snap, errors, global_errs = check_relay(snaps, rows, files, gen.FAILURE_SINK,
                                                  ctx.seed)
+    del rows
     if global_errs:
         ops.record("snapshots", global_errs)
     for fi in range(len(files)):
         ops.record(f"file{fi}", errors.get(fi, []))
 
+    # a file's latency runs from its scheduled drop to the commit of its
+    # micro-batch; the files of one batch commit together, so the metric
+    # averages per batch, not per file (per file, the batch's older files
+    # form a sawtooth whose teeth shift from run to run)
     committed_at = {s["snapshot_id"]: s["committed_at"] for s in snaps}
-    lat, commits = [], []
+    lat, dues = [], {}
     for i in range(warm_files, n_feed):
         sid = file_snap[1 + i]
         if sid is not None:
-            commits.append(committed_at[sid])
-            lat.append(1000 * (committed_at[sid] - feeder.due[i - warm_files]))
+            due = feeder.due[i - warm_files]
+            lat.append(1000 * (committed_at[sid] - due))
+            dues.setdefault(sid, []).append(due)
     if not lat:
         raise RuntimeError("no measured file was committed: " + "; ".join(ops.errors[:3]))
-    span = max(commits) - feeder.due[0]
+    batch_lat = [1000 * (committed_at[sid] - statistics.fmean(due_s))
+                 for sid, due_s in dues.items()]
+    span = max(committed_at[sid] for sid in dues) - feeder.due[0]
     half = len(lat) // 2
     ctx.diag.update({
-        "files_measured": len(lat),
+        "files_measured": len(lat), "batches_measured": len(batch_lat),
         "latency_ms": [round(x, 1) for x in lat],
         "latency_ms_first_half_p50": pctl(lat[:max(1, half)], 0.5),
         "latency_ms_second_half_p50": pctl(lat[half:], 0.5),
+        "latency_ms.p50": pctl(lat, 0.5),
+        "latency_ms.p90": pctl(lat, 0.9),
         "gen_late_ms.max": max(x for f in feeders for x in f.late_ms),
         "snapshots": len(snaps),
     })
     metrics = {
-        "setup_s": (setups[0], "s"),
+        "setup_s": (setup_s, "s"),
         "events_per_s": (len(lat) * file_rows / span, "events/s"),
-        "latency_ms.mean": (statistics.fmean(lat), "ms"),
+        "latency_ms.mean": (statistics.fmean(batch_lat), "ms"),
     }
-    ctx.diag["latency_ms.p50"] = pctl(lat, 0.5)
-    ctx.diag["latency_ms.p90"] = pctl(lat, 0.9)
-    if not ctx.trace:
-        return metrics
-
-    # --- traced: micro-batch spans from the query's progress, layer rates ---
-    # batch 0 is the set-up file
-    batches = [p for p in progress if p.get("numInputRows", 0) > 0 and p["batchId"] > 0]
-    for p in batches:
-        start = _epoch(p["timestamp"])
-        tr.add("streaming.batch", start,
-               start + p["durationMs"].get("triggerExecution", 0) / 1000,
-               batch=p["batchId"])
-    _nest(tr.spans, "streaming.batch", ("storage.commit", "storage.ledger"))
-    texts = [t for tb, _ in feed[:2] for t in tb.column("text").to_pylist()]
-    with tr.span("layers.in_process"):
-        rates = layers.parser_rates(texts, LAYER_BUDGET_S)
-        ts_rate = layers.timestamp_rate(layers.timestamp_values(texts), LAYER_BUDGET_S)
-        enc_rate = layers.encoder_rate(
-            layers.encode_input(layers.decode(texts, layers.ECS_CONFIG)), LAYER_BUDGET_S)
-    ctx.layer_rates = dict(parser=rates, timestamps=ts_rate, encoder=enc_rate,
-                           failed_rows=layers.failed_rows(texts, layers.ECS_CONFIG))
-    ctx.relay_trace = dict(
-        rows=total, progress=batches, chain_len=len(snaps),
-        setup_untraced_s=setups[-2], setup_traced_s=setups[-1],
-        session_start_s=ctx.diag["session_start_cold_s"],
-        worker_boot_s=ctx.diag["worker_boot_cold_s"])
+    if ctx.trace:
+        chain = [d / "in" / f"f{1 + i:05d}.parquet" for i in range(min(CHAIN_FILES, n_feed))]
+        ctx.layers = dict(
+            op_group=stream["group"], ops=len(files), op_rows=total,
+            decode_mode="ecs_ts", udfs=("decode_cef",),
+            chain=traced.prefix_chain(ctx, spark, chain,
+                                      gen.relay_expected(labels[1:1 + len(chain)]),
+                                      layers.ECS_CONFIG),
+            stream=stream,
+            rates=traced.layer_rates(ctx, texts, texts, layers.ECS_CONFIG))
     return metrics
-
-
-def _epoch(ts: str) -> float:
-    """Progress timestamps are ISO-8601 UTC with milliseconds."""
-    return dt.datetime.fromisoformat(ts.replace("Z", "+00:00")).timestamp()
-
-
-def _nest(spans: list[dict], parent_name: str, child_names: tuple) -> None:
-    """Parent each child span to the ``parent_name`` span that contains it."""
-    parents = [s for s in spans if s["name"] == parent_name]
-    for c in spans:
-        if c["name"] in child_names:
-            for p in parents:
-                if p["start"] <= c["start"] and c["end"] <= p["end"] + 0.005:
-                    c["parent"] = p["id"]
-                    break

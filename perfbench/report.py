@@ -1,9 +1,10 @@
 """Per-layer metrics of a traced run, assembled from the spans, the
 in-process layer rates and the Spark event log.
 
-Every name is printed on every workload. A layer the workload does not
-exercise reports 0 (for example the streaming layer on ``sink_fanout``);
-``BENCHMARK.json`` lists the workload each metric is meant for.
+Both workloads run every probe (see ``traced.py``), so every metric is
+measured on every workload. ``spark.*`` and ``udfs.*`` describe the
+workload's own operations, per operation: a ``sink_fanout`` job, or a fed
+``relay_stream`` file.
 """
 
 from __future__ import annotations
@@ -20,115 +21,96 @@ PER_LAYER = [
     ("parser.failed_rows", "count"),
     ("udfs.decode_stage_s", "s"), ("udfs.python_s", "s"),
     ("udfs.bytes_to_python", "bytes"), ("udfs.bytes_from_python", "bytes"),
-    ("udfs.boundary_s", "s"),
+    ("udfs.boundary_ratio", "ratio"),
     ("timestamps.values_per_s_core", "values/s"),
     ("pipeline.enrich_route_s", "s"), ("pipeline.counts_s", "s"),
     ("pipeline.write_sinks_s", "s"), ("pipeline.shuffle_write_bytes", "bytes"),
     ("pipeline.sink_files", "count"), ("pipeline.sink_bytes", "bytes"),
     ("pipeline.max_task_rows", "count"),
-    ("encoder.rows_per_s_core", "rows/s"), ("encoder.stage_s", "s"),
+    ("encoder.rows_per_s_core", "rows/s"),
     ("streaming.batch_ms.p50", "ms"), ("streaming.add_batch_ms.p50", "ms"),
     ("streaming.trigger_overhead_ms.p50", "ms"),
     ("streaming.rows_per_batch.p50", "count"), ("streaming.batches", "count"),
-    ("streaming.self_s", "s"),
+    ("streaming.self_ms.mean", "ms"),
     ("storage.commit_ms.p50", "ms"), ("storage.ledger_ms.p50", "ms"),
-    ("storage.spark_jobs_per_commit", "count"), ("storage.chain_len", "count"),
+    ("storage.spark_jobs_per_commit", "count"),
     ("spark.task_cpu_s", "s"), ("spark.task_run_s", "s"), ("spark.gc_s", "s"),
-    ("spark.shuffle_read_bytes", "bytes"), ("spark.spill_bytes", "bytes"),
-    ("spark.tasks", "count"), ("spark.failed_tasks", "count"),
+    ("spark.shuffle_read_bytes", "bytes"), ("spark.tasks", "count"),
+    ("memory.peak_rss_mb", "MB"), ("memory.jvm_rss_mb", "MB"),
+    ("memory.python_pss_mb", "MB"),
     ("trace.job_wall_s", "s"), ("trace.prefix_sum_s", "s"),
     ("trace.prefix_coverage", "ratio"), ("trace.overhead_ratio", "ratio"),
 ]
-UNITS = dict(PER_LAYER)
 
 
-def _spark(out: dict, t, per: float) -> None:
-    out["spark.task_cpu_s"] = t.cpu_ns / 1e9 / per
-    out["spark.task_run_s"] = t.run_ms / 1e3 / per
-    out["spark.gc_s"] = t.gc_ms / 1e3 / per
-    out["spark.shuffle_read_bytes"] = t.shuffle_read_bytes / per
-    out["spark.spill_bytes"] = t.spill_bytes / per
-    out["spark.tasks"] = t.tasks / per
-    out["spark.failed_tasks"] = t.failed_tasks / per
-
-
-def _udfs(out: dict, t, per: float, rows: int, rate: float, udfs: tuple) -> None:
-    def total(key):
-        return sum(t.python.get(u, {}).get(key, 0) for u in udfs)
-    out["udfs.python_s"] = total("python_ms") / 1e3 / per
-    out["udfs.bytes_to_python"] = total("bytes_to_python") / per
-    out["udfs.bytes_from_python"] = total("bytes_from_python") / per
-    # Python time the decode body does not explain: Arrow/pandas conversion
-    # and worker hand-off (core-seconds on both sides)
-    out["udfs.boundary_s"] = out["udfs.python_s"] - rows / rate
+def _durations_ms(spans: list[dict], name: str) -> list[float]:
+    return [1e3 * (s["end"] - s["start"]) for s in spans if s["name"] == name]
 
 
 def per_layer(ctx, log: EventLog) -> dict:
-    out = {name: 0 for name, _ in PER_LAYER}
-    rates = ctx.layer_rates
+    lay, spans = ctx.layers, ctx.tracer.spans
+    rates, chain, prog = lay["rates"], lay["chain"], lay["stream"]["progress"]
+    delta = chain["delta"]
+    out = {
+        "memory.peak_rss_mb": ctx.diag["peak_rss_mb"],
+        "memory.jvm_rss_mb": ctx.diag["peak_rss_mb.jvm"],
+        "memory.python_pss_mb": ctx.diag["peak_rss_mb.python"],
+        "session.start_s": ctx.diag["session_start_s"],
+        "session.worker_boot_s": ctx.diag["worker_boot_s"],
+        "parser.failed_rows": rates["failed_rows"],
+        "timestamps.values_per_s_core": rates["timestamps"],
+        "encoder.rows_per_s_core": rates["encoder"],
+        "sources.scan_s": delta["scan"], "udfs.decode_stage_s": delta["decode"],
+        "pipeline.enrich_route_s": delta["enrich_route"],
+        "pipeline.counts_s": delta["counts"],
+        "pipeline.write_sinks_s": delta["write_sinks"],
+        "pipeline.sink_files": chain["sink_files"], "pipeline.sink_bytes": chain["sink_bytes"],
+        "trace.job_wall_s": chain["job_wall_s"],
+        "trace.prefix_sum_s": sum(delta.values()),
+        "trace.prefix_coverage": sum(delta.values()) / chain["job_wall_s"],
+        "trace.overhead_ratio": chain["overhead_ratio"],
+    }
     for mode, rate in rates["parser"].items():
         out[f"parser.rows_per_s_core.{mode}"] = rate
-    out["parser.failed_rows"] = rates["failed_rows"]
-    out["timestamps.values_per_s_core"] = rates["timestamps"]
-    out["encoder.rows_per_s_core"] = rates["encoder"]
-    selfs = self_times(ctx.tracer.spans)
+    write = log.totals("prefix.write_sinks.0")
+    out["pipeline.shuffle_write_bytes"] = write.shuffle_write_bytes
+    out["pipeline.max_task_rows"] = write.max_task_records_written
 
-    if ctx.batch_trace is not None:
-        b = ctx.batch_trace
-        d = b["prefix_delta"]
-        out.update({
-            "session.start_s": b["session_start_s"],
-            "session.worker_boot_s": b["worker_boot_s"],
-            "sources.scan_s": d["scan"], "udfs.decode_stage_s": d["decode"],
-            "pipeline.enrich_route_s": d["enrich_route"],
-            "pipeline.counts_s": d["counts"], "pipeline.write_sinks_s": d["write_sinks"],
-            "pipeline.sink_files": b["sink_files"], "pipeline.sink_bytes": b["sink_bytes"],
-            "trace.job_wall_s": b["job_wall_s"],
-            "trace.prefix_sum_s": sum(d.values()),
-            "trace.prefix_coverage": sum(d.values()) / b["job_wall_s"],
-            "trace.overhead_ratio": b["setup_traced_s"] / b["setup_untraced_s"],
-        })
-        job = log.totals("job")
-        per = b["jobs"]
-        out["pipeline.shuffle_write_bytes"] = job.shuffle_write_bytes / per
-        out["pipeline.max_task_rows"] = job.max_task_records_written
-        _spark(out, job, per)
-        # decode is the job's only Python UDF; behind persist its plan node
-        # is not in the log, so its accumulators are not named
-        _udfs(out, job, per, b["rows"], rates["parser"]["v1_full"],
-              ("decode_cef", "other"))
+    # the workload's own operations
+    op, per = log.totals(lay["op_group"]), lay["ops"]
+    out.update({
+        "spark.task_cpu_s": op.cpu_ns / 1e9 / per,
+        "spark.task_run_s": op.run_ms / 1e3 / per,
+        "spark.gc_s": op.gc_ms / 1e3 / per,
+        "spark.shuffle_read_bytes": op.shuffle_read_bytes / per,
+        "spark.tasks": op.tasks / per,
+    })
 
-    if ctx.relay_trace is not None:
-        r = ctx.relay_trace
-        prog = r["progress"]
-        trig = [p["durationMs"].get("triggerExecution", 0) for p in prog]
-        add = [p["durationMs"].get("addBatch", 0) for p in prog]
-        commits = [s for s in ctx.tracer.spans if s["name"] == "storage.commit"]
-        ledgers = [s for s in ctx.tracer.spans if s["name"] == "storage.ledger"]
-        jobs = sum(log.jobs_between(s["start"], s["end"]) for s in commits)
-        out.update({
-            "session.start_s": r["session_start_s"],
-            "session.worker_boot_s": r["worker_boot_s"],
-            "streaming.batch_ms.p50": pctl(trig, 0.5),
-            "streaming.add_batch_ms.p50": pctl(add, 0.5),
-            "streaming.trigger_overhead_ms.p50": pctl(
-                [a - b for a, b in zip(trig, add)], 0.5),
-            "streaming.rows_per_batch.p50": pctl([p["numInputRows"] for p in prog], 0.5),
-            "streaming.batches": len(prog),
-            "streaming.self_s": selfs.get("streaming.batch", 0.0),
-            "storage.commit_ms.p50": pctl([1e3 * (s["end"] - s["start"]) for s in commits], 0.5),
-            "storage.ledger_ms.p50": pctl([1e3 * (s["end"] - s["start"]) for s in ledgers], 0.5),
-            "storage.spark_jobs_per_commit": jobs / len(commits),
-            "storage.chain_len": r["chain_len"],
-            "trace.job_wall_s": pctl(trig, 0.5) / 1e3,
-            "trace.overhead_ratio": r["setup_traced_s"] / r["setup_untraced_s"],
-        })
-        run = log.totals()
-        _spark(out, run, 1)
-        _udfs(out, run, 1, r["rows"], rates["parser"]["ecs_ts"], ("decode_cef",))
-        # the encode runner's wall time includes waiting for its input, which
-        # the decode runner produces in the same task: the difference is the
-        # encoder's own stage time
-        out["encoder.stage_s"] = (run.python.get("encode_cef", {}).get("python_ms", 0)
-                                  / 1e3 - out["udfs.python_s"])
-    return {k: {"value": v, "unit": UNITS[k]} for k, v in out.items()}
+    def python(key):
+        return sum(op.python.get(u, {}).get(key, 0) for u in lay["udfs"])
+    out["udfs.python_s"] = python("python_ms") / 1e3 / per
+    out["udfs.bytes_to_python"] = python("bytes_to_python") / per
+    out["udfs.bytes_from_python"] = python("bytes_from_python") / per
+    # Python runner time over the time the decode body alone needs for the
+    # same rows (core-seconds on both sides): above 1 is the Arrow/pandas
+    # conversion and the worker hand-off
+    out["udfs.boundary_ratio"] = (python("python_ms") / 1e3
+                                  / (lay["op_rows"] / rates["parser"][lay["decode_mode"]]))
+
+    # the exactly-once stream sink's micro-batches
+    trig = [p["durationMs"].get("triggerExecution", 0) for p in prog]
+    add = [p["durationMs"].get("addBatch", 0) for p in prog]
+    commits = [s for s in spans if s["name"] == "storage.commit"]
+    jobs = sum(log.jobs_between(s["start"], s["end"]) for s in commits)
+    out.update({
+        "streaming.batch_ms.p50": pctl(trig, 0.5),
+        "streaming.add_batch_ms.p50": pctl(add, 0.5),
+        "streaming.trigger_overhead_ms.p50": pctl([a - b for a, b in zip(trig, add)], 0.5),
+        "streaming.rows_per_batch.p50": pctl([p["numInputRows"] for p in prog], 0.5),
+        "streaming.batches": len(prog),
+        "streaming.self_ms.mean": 1e3 * self_times(spans)["streaming.batch"] / len(prog),
+        "storage.commit_ms.p50": pctl(_durations_ms(spans, "storage.commit"), 0.5),
+        "storage.ledger_ms.p50": pctl(_durations_ms(spans, "storage.ledger"), 0.5),
+        "storage.spark_jobs_per_commit": jobs / len(commits),
+    })
+    return {k: {"value": out[k], "unit": u} for k, u in PER_LAYER}

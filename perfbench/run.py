@@ -48,9 +48,7 @@ class Ctx:
         self.tracer = Tracer(f"{args.workload}-{args.seed}-{os.getpid()}")
         self.diag: dict = {}
         self.spark = None
-        self.layer_rates = None
-        self.batch_trace = None
-        self.relay_trace = None
+        self.layers: dict = {}     # what a traced run's probes measured
 
 
 def parse_args(argv):
@@ -78,8 +76,8 @@ def execute(args, **sizes) -> tuple[dict, dict]:
     """Run one workload; returns ``(diagnostics, result)``. ``sizes`` shrink
     the workload's inputs (the self-tests use them)."""
     sys.path.insert(0, str(ROOT))
-    from common import (DRIVER_MEM, RssSampler, cpu_ticks, process_age_s,
-                        ref_loop_ms, shutdown_spark, steal_pct)
+    from common import (RssSampler, cpu_ticks, process_age_s, ref_loop_ms,
+                        shutdown_spark, steal_pct)
 
     t0 = time.monotonic() - process_age_s()
     base = ROOT / ".perfbench_work"
@@ -90,7 +88,7 @@ def execute(args, **sizes) -> tuple[dict, dict]:
     env = {"PYTHONPATH": os.pathsep.join(
                [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]),
            "PYSPARK_PYTHON": sys.executable, "TMPDIR": str(work / "tmp"),
-           "SPARK_LOCAL_DIRS": str(work / "local"), "CEFSPARK_DRIVER_MEM": DRIVER_MEM,
+           "SPARK_LOCAL_DIRS": str(work / "local"),
            # the short-lived launcher JVM that spark-submit starts first
            "SPARK_LAUNCHER_OPTS": f"-XX:-UsePerfData -Djava.io.tmpdir={work / 'tmp'}"}
     if args.workload == "sink_fanout":
@@ -110,6 +108,11 @@ def execute(args, **sizes) -> tuple[dict, dict]:
                 metrics = workload.run(ctx, **sizes)
             finally:
                 shutdown_spark(ctx.spark)
+        # memory is reported, not gated: the JVM's resident size follows how
+        # far the collector grows the heap, which varies from run to run
+        ctx.diag.update({"peak_rss_mb": rss.peak / 2**20,
+                         "peak_rss_mb.jvm": rss.peak_jvm / 2**20,
+                         "peak_rss_mb.python": rss.peak_python / 2**20})
         ctx.diag["host.steal_pct"] = steal_pct(ticks0, cpu_ticks())
         ctx.diag["host.ref_loop_ms"] = ref_loop_ms()
         ctx.diag["op_fail_ratio"] = ctx.ops.failed / max(1, ctx.ops.attempted)
@@ -120,7 +123,6 @@ def execute(args, **sizes) -> tuple[dict, dict]:
 
             out = per_layer(ctx, read_event_log(ctx.event_log))
         else:
-            metrics["peak_rss_mb"] = (rss.peak / 2**20, "MB")
             out = {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
         name = f"last-{args.workload}-{args.seed}-trace{int(ctx.trace)}.json"
         with open(base / name, "w") as f:
