@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """cefspark benchmark: one named workload from one seed.
 
-    python3 perfbench/run.py --workload sink_fanout --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload sink_fanout --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. The script builds its inputs from the seed,
 runs the workload on a ``local[4]`` Spark session, checks every operation's
