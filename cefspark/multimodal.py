@@ -187,15 +187,6 @@ def parse_wav(payload: bytes) -> dict:
 # stream that any conformant decoder can decode; the parser walks blocks like
 # any real reader and works on arbitrary GIF87a/89a files, not just ours.
 
-GIF_META_SCHEMA = StructType([
-    StructField("asset_id", StringType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("n_frames", IntegerType()),
-    StructField("n_colors", IntegerType()),
-])
-
-
 def _gif_lzw_encode(pixels: list[int], min_code_size: int = 2) -> bytes:
     """Real GIF LZW stream, fixed-width variant: CLEAR is emitted before every
     literal so the decoder's string table never grows past its initial state
@@ -472,23 +463,6 @@ def synthesize_gif_assets(spark: SparkSession, n: int) -> DataFrame:
     # more on empty-task scheduling than on building/decoding the blobs
     return spark.range(0, n, 1, min(16, max(1, n // 10))).mapInPandas(
         gen, schema=ASSET_SCHEMA)
-
-
-def extract_gif_meta(df: DataFrame) -> DataFrame:
-    """Real animation metadata extraction (mapInPandas over GIF payloads)."""
-    meta_cols = ["width", "height", "n_frames", "n_colors"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [parse_gif(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame([{c: m[c] for c in meta_cols} for m in metas],
-                               columns=meta_cols)
-            out.insert(0, "asset_id", pdf["asset_id"].values)
-            for c in meta_cols:
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return df.mapInPandas(run, schema=GIF_META_SCHEMA)
 
 
 # --- real BMP codec (pure stdlib: BITMAPFILEHEADER + BITMAPINFOHEADER) --------

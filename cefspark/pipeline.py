@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .mappings import PARSE_FAILURE_TAG
 from .parser import DecodeConfig
+from .storage import ManifestTable, list_input_files
 from .udfs import decode_dataframe
 
 FAILURE_SINK = PARSE_FAILURE_TAG
@@ -118,13 +119,15 @@ def salted_repartition(routed: DataFrame, salt_buckets: int = 8,
 
 
 def write_sinks(routed: DataFrame, base_path: str, salt_buckets: int = 8,
-                num_partitions: Optional[int] = None) -> None:
+                num_partitions: Optional[int] = None,
+                mode: str = "overwrite") -> None:
     """Fan out to per-sink tables: one partitioned write (partition pruning on
-    read), salted to bound per-task write volume."""
+    read), salted to bound per-task write volume. ``mode="append"`` adds to
+    the sinks of earlier runs (a resumed run writes only its new rows)."""
     out = salted_repartition(routed, salt_buckets, num_partitions)
     # the extensions map is written as-is (parquet MAP); drop nothing — sinks
     # are the system of record for routed events.
-    out.write.mode("overwrite").partitionBy("sink_id").parquet(base_path)
+    out.write.mode(mode).partitionBy("sink_id").parquet(base_path)
 
 
 _WINDOW_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
@@ -208,12 +211,19 @@ def counts_scalars(counts: DataFrame) -> tuple[int, int]:
     return int(agg["n"] or 0), int(agg["nf"] or 0)
 
 
+#: the scan's source file, carried from below the resume anti-join and the
+#: persist up to :func:`lineage`
+INPUT_FILE_COL = "_input_file"
+
+
 def lineage(routed: DataFrame) -> DataFrame:
     """Per-input-file lineage: where did each sink's rows come from, and how
-    many failed — the audit trail for checkpoint/resume."""
+    many failed — the audit trail for checkpoint/resume. ``routed`` carries
+    :data:`INPUT_FILE_COL`, taken at the scan: ``input_file_name()`` read
+    here would be '' over a persisted frame and fails above a join with a
+    second file source (the resume anti-join)."""
     return (
-        routed.withColumn("_input_file", F.input_file_name())
-        .groupBy("_input_file", "sink_id")
+        routed.groupBy(INPUT_FILE_COL, "sink_id")
         .agg(F.count(F.lit(1)).alias("n_rows"),
              F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failed"))
     )
@@ -224,14 +234,14 @@ class PipelineResult:
     """Driver-bounded job report: top-line scalars + a bounded top-k, never
     the full sink x window count relation (at 100 TB x years that is millions
     of rows — it belongs in a table, not a dataclass). The full counts land
-    at ``counts_path`` when one is given."""
+    in the counts table's snapshot ``snapshot_id`` when one is given."""
     n_input: int
     n_failed: int
     n_sinks: int
     top_sinks: list  # [(sink_id, n_events)] — at most top_k rows
     wall_seconds: float
     lineage_rows: int = 0
-    counts_path: Optional[str] = None
+    snapshot_id: Optional[str] = None
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
@@ -239,42 +249,59 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  decode_config: Optional[DecodeConfig] = None,
                  salt_buckets: int = 8,
                  collect_lineage: bool = False,
-                 counts_path: Optional[str] = None,
+                 counts_table: Optional[ManifestTable] = None,
                  top_k: int = 10) -> PipelineResult:
     """decode -> enrich -> route -> (optional sink write) -> windowed counts.
 
     The windowed counts stay distributed: they are materialized once
-    (eager localCheckpoint — tiny relation, sinks x hours rows), optionally
-    written to ``counts_path`` as the system-of-record report table, and the
-    driver receives only scalars plus the ``top_k`` busiest sinks."""
+    (eager localCheckpoint — tiny relation, sinks x hours rows) and the
+    driver receives only scalars plus the ``top_k`` busiest sinks.
+
+    ``counts_table`` is the system-of-record report table and makes the run
+    resumable: rows of input files an earlier commit consumed are skipped,
+    and this run's counts are committed as one snapshot recording the
+    scan's files. Each snapshot holds only its new files' counts (read the
+    chain with ``read_union``), and the sink write appends. The commit runs
+    last, so a run that fails leaves the table as it was; its re-run writes
+    the unconsumed files' rows to the sinks again (at-least-once sinks,
+    exact counts)."""
     t0 = time.time()
+    inputs = list_input_files(transcripts) if counts_table is not None else []
+    if collect_lineage:
+        transcripts = transcripts.withColumn(INPUT_FILE_COL, F.input_file_name())
+    if counts_table is not None:
+        transcripts = counts_table.filter_new_inputs(transcripts)
     # counts-only runs skip the extensions-map Arrow transfer entirely;
     # sink writes need the full event (sinks are the system of record)
     cols = None if sink_path else ROUTING_COLUMNS
     routed = route(enrich(decode(transcripts, config=decode_config, columns=cols), spark))
-    routed = routed.persist() if sink_path else routed
+    # decode once: persist exactly when the routed rows feed a second action
+    reused = bool(sink_path) or collect_lineage
+    routed = routed.persist() if reused else routed
     try:
         if sink_path:
-            write_sinks(routed, sink_path, salt_buckets=salt_buckets)
-        # materialize the (tiny) agg once; the scalar/top-k jobs below then
-        # read the checkpoint instead of re-running the decode
+            write_sinks(routed.drop(INPUT_FILE_COL) if collect_lineage else routed,
+                        sink_path, salt_buckets=salt_buckets,
+                        mode="overwrite" if counts_table is None else "append")
+        # materialize the (tiny) agg once; the scalar/top-k jobs and the
+        # commit below then read the checkpoint instead of re-running the decode
         counts = sink_counts(routed).localCheckpoint(eager=True)
-        if counts_path:
-            counts.write.mode("overwrite").parquet(counts_path)
         n_input, n_failed = counts_scalars(counts)
         n_sinks = counts.select("sink_id").distinct().count()
         top = (counts.groupBy("sink_id").agg(F.sum("n_events").alias("n_events"))
                .orderBy(F.desc("n_events"), F.asc("sink_id")).limit(top_k).collect())
         lin = lineage(routed).count() if collect_lineage else 0
+        snap = (counts_table.commit(counts, inputs=inputs)
+                if counts_table is not None else None)
     finally:
-        if sink_path:
+        if reused:
             routed.unpersist()
     return PipelineResult(
         n_input=n_input, n_failed=n_failed,
         n_sinks=n_sinks,
         top_sinks=[(r["sink_id"], r["n_events"]) for r in top],
         wall_seconds=time.time() - t0, lineage_rows=lin,
-        counts_path=counts_path)
+        snapshot_id=snap.snapshot_id if snap else None)
 
 
 def value_percentiles(df: DataFrame, group_col: str, value_col: str,

@@ -134,10 +134,6 @@ def _int_elem(x: Column) -> Column:
     return F.floor(x.cast("double") * F.lit(_QUANTUM)).cast("long")
 
 
-def _int_vec(vec: Column) -> Column:
-    return F.transform(vec, _int_elem)
-
-
 def int_bucket_id(vec_col_name: str, planes: list[list[int]]) -> Column:
     """Hyperplane bucket from integer projections — bit j set iff the exact
     integer dot of the quantized vector with plane j is > 0.

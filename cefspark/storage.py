@@ -374,9 +374,10 @@ class ManifestTable:
         delta-style chains (incremental appends read via ``read_union``)
         ancestor data IS table data — run ``compact`` first, which rewrites
         the full chain union into the latest snapshot, making
-        ``expire_snapshots(keep_last=1)`` lossless. For full-view tables
-        (every commit is the complete state, e.g. run_pipeline's counts
-        report) expiry is always lossless.
+        ``expire_snapshots(keep_last=1)`` lossless. ``run_pipeline``'s
+        counts table is such a chain: with resume, each snapshot holds only
+        the newly consumed files' counts. Only full-view tables (every
+        commit is the complete state) expire losslessly without a compact.
 
         At 100 TB this is the table-maintenance path that bounds manifest
         count and storage growth — the moral equivalent of Iceberg's

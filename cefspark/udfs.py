@@ -46,29 +46,7 @@ DECODED_STRUCT = StructType([
 _DECODE_OUT_COLS = [f.name for f in DECODED_STRUCT.fields]
 
 
-class DecodeMetrics:
-    """Executor-side decode counters surfaced through Spark accumulators —
-    the per-partition metrics channel of the north rule. Updates flow back
-    with task completion; read ``.parsed.value`` / ``.failed.value`` on the
-    driver after an action.
-
-    Accumulator semantics caveat: Spark guarantees exactly-once updates only
-    for *actions*; if the decoded DataFrame feeds multiple actions without a
-    persist() in between (or a task retries), the UDF re-executes and these
-    counters over-count. Persist the decoded frame (as pipeline.run_pipeline
-    does) or read the counters after the single action that consumed it."""
-
-    def __init__(self, spark):
-        sc = spark.sparkContext
-        self.parsed = sc.accumulator(0)
-        self.failed = sc.accumulator(0)
-
-    def as_dict(self) -> dict:
-        return {"parsed": self.parsed.value, "failed": self.failed.value}
-
-
 def make_decode_udf(config: Optional[DecodeConfig] = None,
-                    metrics: Optional[DecodeMetrics] = None,
                     columns: Optional[list] = None):
     """Build the decode pandas UDF. ``config.now`` is pinned here (on the
     driver) if unset, so every executor infers yearless timestamps against
@@ -83,8 +61,6 @@ def make_decode_udf(config: Optional[DecodeConfig] = None,
     if cfg.ecs_mode and cfg.now is None:
         # copy before pinning: never mutate the caller's (possibly reused) config
         cfg = dataclasses.replace(cfg, now=pd.Timestamp.now(tz="UTC").isoformat())
-    acc_parsed = metrics.parsed if metrics else None
-    acc_failed = metrics.failed if metrics else None
     if columns is None:
         out_cols, schema = _DECODE_OUT_COLS, DECODED_STRUCT
     else:
@@ -107,12 +83,7 @@ def make_decode_udf(config: Optional[DecodeConfig] = None,
 
     @F.pandas_udf(schema)
     def decode_cef(texts: pd.Series) -> pd.DataFrame:
-        out = decode_batch(texts, cfg, columns=out_cols)
-        if acc_parsed is not None:
-            n_failed = int(out["error"].notna().sum())
-            acc_failed.add(n_failed)
-            acc_parsed.add(len(out) - n_failed)
-        return out[out_cols]
+        return decode_batch(texts, cfg, columns=out_cols)[out_cols]
 
     return decode_cef
 
@@ -120,7 +91,6 @@ def make_decode_udf(config: Optional[DecodeConfig] = None,
 def decode_dataframe(df: DataFrame, text_col: str = "text",
                      config: Optional[DecodeConfig] = None,
                      struct_col: str = "cef", flatten: bool = True,
-                     metrics: Optional[DecodeMetrics] = None,
                      columns: Optional[list] = None) -> DataFrame:
     """Decode ``df[text_col]`` CEF payloads; appends the decoded columns.
 
@@ -128,7 +98,7 @@ def decode_dataframe(df: DataFrame, text_col: str = "text",
     Catalyst prunes unused ones and the UDF boundary stays a single
     projection stage.
     """
-    udf = make_decode_udf(config, metrics, columns)
+    udf = make_decode_udf(config, columns)
     out_names = {f.name for f in DECODED_STRUCT.fields} if columns is None else set(columns)
     if config is not None and config.raw_data_field:
         out_names = out_names | {config.raw_data_field}
@@ -184,15 +154,6 @@ def ext(key: str) -> Column:
     """Extension accessor: ``ext('sourceAddress')`` — map lookup the optimizer
     can see through after the decode projection."""
     return F.col("extensions").getItem(key)
-
-
-def promote(df: DataFrame, keys: list[str], prefix: str = "") -> DataFrame:
-    """Promote extension-map entries to top-level string columns (for
-    downstream relational work: joins/filters/aggregations on typed columns)."""
-    out = df
-    for k in keys:
-        out = out.withColumn(prefix + k, ext(k))
-    return out
 
 
 #: ECS timestamp string (our 9-digit ISO rendering) -> Spark TimestampType (µs).

@@ -9,24 +9,28 @@ Usage (local example):
         --input /data/transcripts --sinks /data/sinks --table /data/counts \
         --salt 8 --now 2026-08-16T00:00:00Z
 
-Reads the transcript table (or synthesizes --synthesize N turns), runs
-decode -> enrich -> route -> salted sink writes -> windowed counts, commits
-the counts as a snapshot (checkpoint/resume via the manifest table: re-runs
-skip already-consumed input files), and prints one JSON line of metrics.
+Reads the transcript table (or raw log files, or synthesizes --synthesize N
+turns) and hands it to ``pipeline.run_pipeline``: decode -> enrich -> route
+-> salted sink writes -> windowed counts. With --table the counts are
+committed as a snapshot of a manifest table, and re-runs skip the input
+files an earlier commit consumed (checkpoint/resume). Prints the run's
+``PipelineResult`` as one JSON line: n_input, n_failed, n_sinks,
+top_sinks, wall_seconds, lineage_rows (one per input file x sink; --input
+only) and snapshot_id (--table only).
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="transcript parquet path (conv_id,turn_idx,role,text,tool,ts)")
     p.add_argument("--input-format", choices=["table", "raw"], default="table",
@@ -39,74 +43,43 @@ def main() -> None:
     p.add_argument("--cpus", type=int, default=0)
     p.add_argument("--ecs", action="store_true")
     p.add_argument("--now", help="injected clock for yearless timestamps (ISO8601)")
-    args = p.parse_args()
+    args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     from cefspark import fixtures, pipeline
     from cefspark.parser import DecodeConfig
     from cefspark.session import get_spark
-    from cefspark.storage import ManifestTable, list_input_files
-    from cefspark.udfs import decode_dataframe
+    from cefspark.storage import ManifestTable
 
     spark = SparkSession.getActiveSession() or get_spark(
         app_name="cefspark-pipeline", cores=args.cpus or None)
 
-    t0 = time.time()
     if args.input and args.input_format == "raw":
         from pyspark.sql import functions as F
 
         from cefspark.sources import read_raw_lines
 
-        raw = read_raw_lines(spark, args.input, args.delimiter)
         # raw frames carry no transcript metadata; synthesize the routing keys
-        transcripts = (raw.withColumn("conv_id", F.input_file_name())
+        transcripts = (read_raw_lines(spark, args.input, args.delimiter)
+                       .withColumn("conv_id", F.input_file_name())
                        .withColumn("turn_idx", F.lit(0))
                        .withColumn("role", F.lit("log"))
                        .withColumn("tool", F.lit(""))
                        .withColumn("ts", F.current_timestamp()))
-        inputs = list_input_files(raw)
     elif args.input:
         transcripts = spark.read.parquet(args.input)
-        inputs = list_input_files(transcripts)
     elif args.synthesize:
         transcripts = fixtures.transcripts_df(spark, args.synthesize)
-        inputs = []
     else:
         p.error("one of --input / --synthesize is required")
 
-    table = ManifestTable(args.table) if args.table else None
-    if table is not None and args.input:
-        transcripts = table.filter_new_inputs(transcripts)
-
-    cfg = DecodeConfig(ecs_mode=args.ecs, now=args.now)
-    routed = pipeline.route(pipeline.enrich(
-        decode_dataframe(transcripts, config=cfg), spark)).persist()
-
-    if args.sinks:
-        pipeline.write_sinks(routed, args.sinks, salt_buckets=args.salt)
-    # counts stay distributed: materialize the (tiny) agg once, then the
-    # commit / scalar jobs read the checkpoint — the driver only ever sees
-    # scalars, never the sink x window relation (100 TB x years = millions
-    # of report rows)
-    counts = pipeline.sink_counts(routed).localCheckpoint(eager=True)
-    n, n_failed = pipeline.counts_scalars(counts)
-    if table is not None:
-        # n_rows=None -> commit counts the written snapshot itself (the
-        # snapshot holds the counts relation, not the event rows)
-        table.commit(counts, inputs=inputs, n_rows=None)
-    lineage_rows = pipeline.lineage(routed).count() if args.input else 0
-    routed.unpersist()
-
-    wall = time.time() - t0
-    print(json.dumps({
-        "n_turns": n,
-        "n_failed": n_failed,
-        "lineage_rows": lineage_rows,
-        "wall_sec": round(wall, 2),
-        "turns_per_sec": round(n / wall, 1) if wall > 0 else None,
-        "snapshot": table.latest_snapshot_id() if table else None,
-    }))
+    res = pipeline.run_pipeline(
+        spark, transcripts, sink_path=args.sinks,
+        decode_config=DecodeConfig(ecs_mode=args.ecs, now=args.now),
+        salt_buckets=args.salt, collect_lineage=bool(args.input),
+        counts_table=ManifestTable(args.table) if args.table else None)
+    print(json.dumps(dataclasses.asdict(res)))
 
 
 if __name__ == "__main__":

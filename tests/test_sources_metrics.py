@@ -1,12 +1,12 @@
-"""Raw-stream framing (D1), binary/UTF-8 ingest (D4), decode metrics
-accumulators."""
+"""Raw-stream framing (D1), binary/UTF-8 ingest (D4) and transcript
+sources."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from cefspark import fixtures, sources
-from cefspark.udfs import DecodeMetrics, decode_dataframe
+from cefspark.udfs import decode_dataframe
 
 CANON = ("CEF:0|security|threatmanager|1.0|100|"
          "trojan successfully stopped|10|src=10.0.0.192 spt=1232")
@@ -44,17 +44,6 @@ def test_binary_ingest_valid_and_invalid_utf8(spark):
     assert out[2]["error"] == "invalid byte sequence in UTF-8"
     assert out[2]["message"] is not None  # replacement-char rendering kept
     assert out[3]["error"] == "null payload"
-
-
-def test_decode_metrics_accumulators(spark):
-    pdf = fixtures.transcripts_pdf(600)
-    df = spark.createDataFrame(pdf)
-    metrics = DecodeMetrics(spark)
-    dec = decode_dataframe(df, metrics=metrics)
-    n_failed_truth = dec.where(F.col("error").isNotNull()).count()
-    got = metrics.as_dict()
-    assert got["failed"] == n_failed_truth > 0
-    assert got["parsed"] == 600 - n_failed_truth
 
 
 def test_read_raw_lines_over_multi_file_directory(spark, tmp_path):
