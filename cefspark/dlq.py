@@ -13,9 +13,10 @@ composition over that contract and the snapshot store:
 - :func:`replay` re-decodes the whole queue after an upstream ``fix``
   (a DataFrame->DataFrame repair, e.g. a mutate gsub chain) and/or a
   changed DecodeConfig, splitting recovered from still-failing rows.
-- :func:`drain` commits the still-failing remainder as the queue's new
-  full state (re-rooted rewrite, compact-style), so recovered rows leave
-  the queue while time travel still shows every pre-drain state.
+- :func:`drain` publishes the still-failing remainder as the queue's new
+  full state through ``ManifestTable.replace`` (a re-rooted rewrite, like
+  compact), so recovered rows leave the queue while time travel still
+  shows every pre-drain state.
 
 Scale: quarantine is a filter + append (no shuffle beyond the write);
 replay is one decode pass over the queue — which holds only failures,
@@ -88,8 +89,8 @@ def replay(spark: SparkSession, table: ManifestTable,
 
 def drain(spark: SparkSession, table: ManifestTable,
           still_failing: DataFrame, batch_tag: str) -> Snapshot:
-    """Commit ``still_failing`` (in queue shape: dlq_id/payload/
-    dlq_error) as the queue's NEW full state and re-root the chain —
+    """Publish ``still_failing`` (in queue shape: dlq_id/payload/
+    dlq_error) as the queue's NEW full state with ``table.replace`` —
     recovered rows are gone from every future read, superseded
     snapshots become expirable orphans, time travel keeps pre-drain
     history. The drain itself is ledgered under its own token so a
@@ -98,10 +99,11 @@ def drain(spark: SparkSession, table: ManifestTable,
 
     Single-writer caveat (same as upsert/delete_where): the drain is a
     read->rewrite span — a quarantine committed between this drain's read
-    and its re-root publish is silently dropped by the re-root. Run
+    and its ``replace`` publish is silently dropped by it. Run
     drains in the queue's single-writer maintenance window."""
     token = _TOKEN.format(tag=batch_tag)
-    if token in table.consumed_inputs():
+    consumed = table.consumed_inputs()
+    if token in consumed:
         # the documented no-op contract (mirrors quarantine's guard): a
         # retried drain must not stack another full-state rewrite and
         # orphan a snapshot per retry (ADVICE r6)
@@ -109,6 +111,4 @@ def drain(spark: SparkSession, table: ManifestTable,
     out = still_failing.select(
         F.col("dlq_id"), F.col("payload"),
         F.coalesce(F.col("error"), F.col("dlq_error")).alias("dlq_error"))
-    inputs = sorted(table.consumed_inputs() | {token})
-    snap = table.commit(out, inputs=inputs)
-    return table._reroot(snap)
+    return table.replace(out, inputs=sorted(consumed | {token}))

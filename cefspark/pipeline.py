@@ -73,20 +73,16 @@ def decode(df: DataFrame, text_col: str = "text",
     return decode_dataframe(df, text_col=text_col, config=config, columns=columns)
 
 
-def enrich(decoded: DataFrame, spark: SparkSession,
-           vendors: Optional[DataFrame] = None,
-           severities: Optional[DataFrame] = None) -> DataFrame:
+def enrich(decoded: DataFrame, spark: SparkSession) -> DataFrame:
     """Broadcast hash joins against the vendor-tier and severity-band dims.
 
     Both sides are explicitly ``F.broadcast`` — never a shuffle join for a
     10-row dimension. Missing/unmatched keys land in band/tier 'unknown'.
     """
-    vendors = vendors if vendors is not None else vendor_lookup_df(spark)
-    severities = severities if severities is not None else severity_lookup_df(spark)
     out = (
         decoded
-        .join(F.broadcast(vendors), on="deviceVendor", how="left")
-        .join(F.broadcast(severities), on="severity", how="left")
+        .join(F.broadcast(vendor_lookup_df(spark)), on="deviceVendor", how="left")
+        .join(F.broadcast(severity_lookup_df(spark)), on="severity", how="left")
         .withColumn("vendor_tier", F.coalesce("vendor_tier", F.lit("unknown")))
         .withColumn("severity_band", F.coalesce("severity_band", F.lit("unknown")))
     )

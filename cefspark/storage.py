@@ -5,17 +5,17 @@ No table-format runtime jar (Iceberg/Delta) ships in this sandbox
 directories: every commit writes data files then atomically publishes a JSON
 *manifest* (snapshot id, parent, input files consumed, row counts). Readers
 resolve the latest manifest; resume anti-joins away already-consumed input
-files. The `ManifestTable` interface (commit / read / snapshot /
-filter_new_inputs) is the seam where a real catalog-backed table would plug
-in: `detect_table_format` / `open_table` (bottom of this module) probe the
-deployment for a Delta/Iceberg runtime and route accordingly, and
+files. The `ManifestTable` interface (commit / replace / read / snapshot /
+chain / filter_new_inputs) is the seam where a real catalog-backed table
+would plug in: `detect_table_format` / `open_table` (bottom of this module)
+probe the deployment for a Delta/Iceberg runtime and route accordingly, and
 `TABLE_CONTRACT` records exactly which catalog operation backs each seam
 method. No catalog jar ships in this sandbox, so the parquet-backed
 implementation is the one every test exercises.
 
-Scale design: the snapshot CHAIN is walked driver-side (bounded by commit
-count, not data), but the per-snapshot *input-file lists* — the part that
-grows with data volume — are only ever materialized as a Spark relation
+Scale design: the snapshot CHAIN is walked driver-side (`chain`, bounded by
+commit count, not data), but the per-snapshot *input-file lists* — the part
+that grows with data volume — are only ever materialized as a Spark relation
 (`spark.read.json` over the chain's manifest files), and resume filtering is
 a broadcast LEFT ANTI join against that relation, never a driver-built
 `isin` literal list.
@@ -91,6 +91,31 @@ class ManifestTable:
         ``ConcurrentCommitError`` if the lock can't be won in ``lock_timeout``
         seconds; a lockfile older than ``_STALE_LOCK_SECONDS`` (crashed
         committer — the locked section is milliseconds) is broken."""
+        return self._commit(df, inputs, partition_by, n_rows, lock_timeout,
+                            rewrite=False, sort_cols=sort_cols, n_files=n_files)
+
+    def replace(self, df: DataFrame, inputs: Optional[list[str]] = None,
+                partition_by: Optional[list[str]] = None,
+                n_rows: Optional[int] = None,
+                lock_timeout: float = 120.0) -> Snapshot:
+        """Write df as the table's FULL new state (an overwrite commit):
+        ``commit``'s write and lock, but the manifest is published with no
+        parent inside the same locked section as the one LATEST flip. The
+        new root IS the full table, so it must never be visible chained to
+        the history it already contains (``read_union`` would count every
+        row twice); a crash leaves either the old chain or the new root.
+        ``inputs`` is the consumed-input ledger the new state keeps —
+        whole-table rewrites pass ``sorted(consumed_inputs())`` so resume
+        and batch tokens survive. Superseded snapshots become orphans for
+        ``expire_snapshots``; time travel reaches them until then."""
+        return self._commit(df, inputs, partition_by, n_rows, lock_timeout,
+                            rewrite=True)
+
+    def _commit(self, df: DataFrame, inputs: Optional[list[str]],
+                partition_by: Optional[list[str]], n_rows: Optional[int],
+                lock_timeout: float, rewrite: bool,
+                sort_cols: Optional[list[str]] = None,
+                n_files: int = 32) -> Snapshot:
         snap_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self.root, "data", snap_id)
         if sort_cols:
@@ -105,23 +130,23 @@ class ManifestTable:
         with self._commit_lock(lock_timeout):
             snap = Snapshot(
                 snapshot_id=snap_id,
-                parent_id=self.latest_snapshot_id(),
+                parent_id=None if rewrite else self.latest_snapshot_id(),
                 committed_at=time.time(),
                 n_rows=n_rows,
                 inputs=sorted(set(inputs or [])),
                 data_dir=data_dir,
             )
             # manifest file first, then atomic pointer flip
-            mpath = os.path.join(self._manifests, f"{snap_id}.json")
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(snap.__dict__, f, indent=1)
-            os.rename(tmp, mpath)
-            ptmp = self._latest + ".tmp"
-            with open(ptmp, "w") as f:
-                f.write(snap_id)
-            os.rename(ptmp, self._latest)
+            self._write_manifest(snap)
+            _atomic_write(self._latest, snap_id)
         return snap
+
+    def _manifest_path(self, snapshot_id: str) -> str:
+        return os.path.join(self._manifests, f"{snapshot_id}.json")
+
+    def _write_manifest(self, snap: Snapshot) -> None:
+        _atomic_write(self._manifest_path(snap.snapshot_id),
+                      json.dumps(snap.__dict__, indent=1))
 
     _STALE_LOCK_SECONDS = 60.0
 
@@ -241,7 +266,7 @@ class ManifestTable:
         sid = snapshot_id or self.latest_snapshot_id()
         if sid is None:
             return None
-        with open(os.path.join(self._manifests, f"{sid}.json")) as f:
+        with open(self._manifest_path(sid)) as f:
             return Snapshot(**json.load(f))
 
     def read(self, spark: SparkSession, snapshot_id: Optional[str] = None) -> Optional[DataFrame]:
@@ -256,15 +281,19 @@ class ManifestTable:
         the full logical table when commits are incremental appends
         (checkpoint/resume style). A post-``compact`` table has a
         single-snapshot chain, where this equals ``read``."""
-        dirs = []
-        sid = self.latest_snapshot_id()
+        return _read_snapshots(spark, self.chain())
+
+    def chain(self, snapshot_id: Optional[str] = None) -> list[Snapshot]:
+        """The snapshots on the chain ending at ``snapshot_id`` (LATEST by
+        default), newest first — the module's one walk of ``parent_id``
+        links. Driver-side, bounded by commit count; each manifest is read
+        once."""
+        out: list[Snapshot] = []
+        sid = snapshot_id or self.latest_snapshot_id()
         while sid:
-            snap = self.snapshot(sid)
-            dirs.append(snap.data_dir)
-            sid = snap.parent_id
-        if not dirs:
-            return None
-        return _read_snapshot_dirs(spark, dirs)
+            out.append(self.snapshot(sid))
+            sid = out[-1].parent_id
+        return out
 
     def snapshot_as_of(self, ts: float) -> Optional[Snapshot]:
         """Time travel: the snapshot that WAS the table's latest at
@@ -305,26 +334,9 @@ class ManifestTable:
         snap = self.snapshot_as_of(ts)
         if snap is None:
             return None
-        dirs = []
-        sid: Optional[str] = snap.snapshot_id
-        while sid:
-            s = self.snapshot(sid)
-            dirs.append(s.data_dir)
-            sid = s.parent_id
-        return _read_snapshot_dirs(spark, dirs)
+        return _read_snapshots(spark, self.chain(snap.snapshot_id))
 
     # -- resume -----------------------------------------------------------------
-
-    def _chain_manifest_paths(self) -> list[str]:
-        """Manifest file paths for the LATEST snapshot chain (driver-side,
-        bounded by the number of commits — never by input-file count)."""
-        paths = []
-        sid = self.latest_snapshot_id()
-        while sid:
-            paths.append(os.path.join(self._manifests, f"{sid}.json"))
-            with open(paths[-1]) as f:
-                sid = json.load(f).get("parent_id")
-        return paths
 
     def consumed_inputs(self) -> set[str]:
         """Union of input files consumed across the snapshot chain.
@@ -332,19 +344,13 @@ class ManifestTable:
         Driver-side AUDIT helper (tests / small chains). Scale paths use
         `consumed_inputs_df` — at 100 TB the consumed-file list is itself
         data, and it must never be materialized on the driver."""
-        out: set[str] = set()
-        sid = self.latest_snapshot_id()
-        while sid:
-            snap = self.snapshot(sid)
-            out.update(snap.inputs)
-            sid = snap.parent_id
-        return out
+        return set().union(*(s.inputs for s in self.chain()))
 
     def consumed_inputs_df(self, spark: SparkSession) -> Optional[DataFrame]:
         """Distinct consumed input files as a Spark relation: the chain's
         manifest JSONs are read executor-side and their `inputs` arrays
         exploded, so a million-file history never touches the driver."""
-        paths = self._chain_manifest_paths()
+        paths = [self._manifest_path(s.snapshot_id) for s in self.chain()]
         if not paths:
             return None
         # manifests are pretty-printed (multiline) JSON, one document per file
@@ -388,12 +394,7 @@ class ManifestTable:
             # keep_last=0 would delete the chain but leave LATEST dangling,
             # bricking every subsequent read and chain walk
             raise ValueError(f"keep_last must be >= 1 (got {keep_last})")
-        chain = []
-        sid = self.latest_snapshot_id()
-        while sid:
-            snap = self.snapshot(sid)
-            chain.append(snap)
-            sid = snap.parent_id
+        chain = self.chain()
         kept, expired = chain[:keep_last], chain[keep_last:]
         all_ids = {os.path.splitext(f)[0] for f in os.listdir(self._manifests)
                    if f.endswith(".json")}
@@ -404,45 +405,30 @@ class ManifestTable:
             # BEFORE flipping LATEST, so a fresh off-chain manifest may be
             # an in-flight commit, not a lost race (Iceberg's orphan cleanup
             # age-gates for the same reason)
-            mpath = os.path.join(self._manifests, f"{sid}.json")
             try:
-                age = now - os.path.getmtime(mpath)
+                age = now - os.path.getmtime(self._manifest_path(sid))
             except FileNotFoundError:
                 continue
             if age >= orphan_grace_seconds:
                 orphans.add(sid)
-        if not expired and not orphans:
-            return []
-        if kept and expired:
+        if expired:
             # fold expired ancestors' lineage into the oldest kept manifest
             # and re-root it, so filter_new_inputs keeps full coverage
             oldest = kept[-1]
-            folded = sorted(set(oldest.inputs).union(
-                *[s.inputs for s in expired]))
-            oldest.inputs = folded
+            oldest.inputs = sorted(set(oldest.inputs).union(
+                *(s.inputs for s in expired)))
             oldest.parent_id = None
-            mpath = os.path.join(self._manifests, f"{oldest.snapshot_id}.json")
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(oldest.__dict__, f, indent=1)
-            os.rename(tmp, mpath)
-        gone = []
-        for s in expired:
-            shutil.rmtree(s.data_dir, ignore_errors=True)
+            self._write_manifest(oldest)
+        gone = {s.snapshot_id: s.data_dir for s in expired}
+        gone.update((sid, os.path.join(self.root, "data", sid))
+                    for sid in orphans)
+        for sid, data_dir in gone.items():
+            shutil.rmtree(data_dir, ignore_errors=True)
             try:
-                os.remove(os.path.join(self._manifests, f"{s.snapshot_id}.json"))
+                os.remove(self._manifest_path(sid))
             except FileNotFoundError:
                 pass
-            gone.append(s.snapshot_id)
-        for sid in orphans:
-            shutil.rmtree(os.path.join(self.root, "data", sid),
-                          ignore_errors=True)
-            try:
-                os.remove(os.path.join(self._manifests, f"{sid}.json"))
-            except FileNotFoundError:
-                pass
-            gone.append(sid)
-        return gone
+        return list(gone)
 
     def compact(self, spark: SparkSession,
                 target_file_bytes: int = 128 * 1024 * 1024,
@@ -472,12 +458,7 @@ class ManifestTable:
         Mutually exclusive with ``partition_by`` (directory partitioning);
         pick directories for low-cardinality routing keys, clustering for
         high-cardinality range/filter keys (timestamps, user ids)."""
-        chain = []
-        sid = self.latest_snapshot_id()
-        while sid:
-            snap = self.snapshot(sid)
-            chain.append(snap)
-            sid = snap.parent_id
+        chain = self.chain()
         if not chain:
             return None
         total = 0
@@ -489,7 +470,7 @@ class ManifestTable:
         if partition_by and cluster_by:
             raise ValueError("partition_by and cluster_by are mutually exclusive")
         n_files = max(1, -(-total // target_file_bytes))  # ceil
-        df = _read_snapshot_dirs(spark, [s.data_dir for s in chain])
+        df = _read_snapshots(spark, chain)
         if cluster_by:
             cols = [F.col(c) for c in cluster_by]
             out = (df.repartitionByRange(n_files, *cols)
@@ -498,41 +479,12 @@ class ManifestTable:
             out = df.repartition(n_files, *partition_by)
         else:
             out = df.coalesce(n_files)
-        inputs = sorted(set().union(*[s.inputs for s in chain]))
-        n_rows = sum(s.n_rows for s in chain)
-        snap = self.commit(out, inputs=inputs, partition_by=partition_by,
-                           n_rows=n_rows)
-        # RE-ROOT: the compacted snapshot IS the full table, so it must not
-        # chain to the ancestors it duplicates — read_union would
-        # double-count every pre-compact row, and a second compact would
-        # bake the duplicates in permanently. The superseded snapshots
-        # become orphans for expire_snapshots to reclaim.
-        return self._reroot(snap)
-
-    def _reroot(self, snap: Snapshot) -> Snapshot:
-        """Republish ``snap`` with no parent: it IS the full table (used by
-        every whole-table rewrite — compact/upsert/delete_where — whose
-        output already contains the surviving history; leaving the chain
-        intact would double-count through read_union)."""
-        snap.parent_id = None
-        mpath = os.path.join(self._manifests, f"{snap.snapshot_id}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(snap.__dict__, f, indent=1)
-        os.rename(tmp, mpath)
-        return snap
-
-    def _chain_inputs(self) -> list[str]:
-        """Union of every chain snapshot's consumed-input tokens — carried
-        through whole-table rewrites so checkpoint-resume and streaming
-        batch ledgers survive them."""
-        inputs: set[str] = set()
-        sid = self.latest_snapshot_id()
-        while sid:
-            s = self.snapshot(sid)
-            inputs.update(s.inputs)
-            sid = s.parent_id
-        return sorted(inputs)
+        # the compacted snapshot IS the full table: published re-rooted, it
+        # never chains to the ancestors it duplicates, which become orphans
+        # for expire_snapshots to reclaim
+        inputs = sorted(set().union(*(s.inputs for s in chain)))
+        return self.replace(out, inputs=inputs, partition_by=partition_by,
+                            n_rows=sum(s.n_rows for s in chain))
 
     def upsert(self, spark: SparkSession, updates: DataFrame,
                key_cols: list[str],
@@ -568,10 +520,9 @@ class ManifestTable:
                 cond = c if cond is None else (cond & c)
             merged = (current.join(keys, on=cond, how="left_anti")
                       .unionByName(updates))
-        snap = self.commit(merged, inputs=self._chain_inputs(),
-                           partition_by=partition_by,
-                           lock_timeout=lock_timeout)
-        return self._reroot(snap)
+        return self.replace(merged, inputs=sorted(self.consumed_inputs()),
+                            partition_by=partition_by,
+                            lock_timeout=lock_timeout)
 
     def delete_where(self, spark: SparkSession, condition,
                      partition_by: Optional[list[str]] = None,
@@ -593,10 +544,10 @@ class ManifestTable:
             raise ValueError("delete_where on an empty table")
         n_before = current.count()
         kept = current.where(~F.coalesce(condition, F.lit(False)))
-        snap = self.commit(kept, inputs=self._chain_inputs(),
-                           partition_by=partition_by,
-                           lock_timeout=lock_timeout)
-        return self._reroot(snap), n_before - snap.n_rows
+        snap = self.replace(kept, inputs=sorted(self.consumed_inputs()),
+                            partition_by=partition_by,
+                            lock_timeout=lock_timeout)
+        return snap, n_before - snap.n_rows
 
     def filter_new_inputs(self, df: DataFrame) -> DataFrame:
         """Drop rows from input files already consumed (checkpoint resume).
@@ -619,17 +570,31 @@ class ManifestTable:
                 .drop("_f"))
 
 
-def _read_snapshot_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    """Union the data of several snapshot dirs. Each dir is scanned
-    SEPARATELY and unioned by name: a single multi-path ``parquet()`` call
-    would run partition discovery across unrelated snapshot roots and
-    reject partitioned snapshots with CONFLICTING_DIRECTORY_STRUCTURES
-    (there is no common base to infer from). Per-dir scans also tolerate
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` via a sibling .tmp and a rename (atomic
+    on POSIX): a reader sees the old file or the new one, never a torn
+    write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
+
+
+def _read_snapshots(spark: SparkSession,
+                    snaps: list[Snapshot]) -> Optional[DataFrame]:
+    """Union the data of several snapshots (None when there are none).
+    Each snapshot dir is scanned SEPARATELY and unioned by name: a single
+    multi-path ``parquet()`` call would run partition discovery across
+    unrelated snapshot roots and reject partitioned snapshots with
+    CONFLICTING_DIRECTORY_STRUCTURES (there is no common base to infer
+    from). Per-dir scans also tolerate
     benign schema evolution between commits (missing columns read as
     NULL). The union is a metadata-only plan node — no extra shuffle."""
-    out = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d),
+    if not snaps:
+        return None
+    out = spark.read.parquet(snaps[0].data_dir)
+    for s in snaps[1:]:
+        out = out.unionByName(spark.read.parquet(s.data_dir),
                               allowMissingColumns=True)
     return out
 
@@ -672,6 +637,8 @@ TABLE_CONTRACT = {
     "filter_new_inputs": "anti-join input_file_name() against a "
                          "consumed-files table committed in the SAME "
                          "transaction as the data (atomic resume marker)",
+    "replace": "Delta: overwrite commit (remove every file + add the new "
+               "ones in one txn) / Iceberg: overwriteFiles snapshot commit",
     "expire_snapshots": "Delta: VACUUM / Iceberg: expireSnapshots",
     "compact": "Delta: OPTIMIZE (+ ZORDER for cluster_by) / Iceberg: "
                "rewriteDataFiles (sort strategy for cluster_by)",
@@ -749,7 +716,6 @@ def dedup_ingest(spark: SparkSession, corpus: "ManifestTable",
     instead record fingerprints for rows that never landed — silent DATA
     LOSS, unrepairable downstream. Duplicates over loss is the right
     default for training corpora."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     if "_fp" in batch.columns:
@@ -858,23 +824,16 @@ def incremental_rollup(spark: SparkSession, source: "ManifestTable",
 
     Returns ``{"n_new_snapshots", "n_groups", "snapshot_id"}`` (scalars
     only). Idempotent: a run with no new snapshots commits nothing."""
-    from pyspark.sql import functions as F
-
     sk_col = f"{distinct_col}_hll" if distinct_col else None
     done = {t for t in rollup.consumed_inputs()
             if t.startswith("snapshot://")}
-    chain: list[Snapshot] = []
-    sid = source.latest_snapshot_id()
-    while sid:
-        s = source.snapshot(sid)
-        if f"snapshot://{s.snapshot_id}" not in done:
-            chain.append(s)
-        sid = s.parent_id
+    chain = [s for s in source.chain()
+             if f"snapshot://{s.snapshot_id}" not in done]
     if not chain:
         return {"n_new_snapshots": 0, "n_groups": 0,
                 "snapshot_id": rollup.latest_snapshot_id()}
 
-    delta = _read_snapshot_dirs(spark, [s.data_dir for s in chain])
+    delta = _read_snapshots(spark, chain)
     aggs = [F.count(F.lit(1)).alias(count_col)]
     if distinct_col:
         aggs.append(F.hll_sketch_agg(distinct_col, F.lit(sketch_lgk))
@@ -923,8 +882,6 @@ def zorder_value(a, b) -> "Column":
     dimensions. Pure bitwise magic-shift expressions — whole-stage
     codegen, no UDF. Callers with wider/continuous keys quantize first
     (e.g. ``F.floor(col / bucket)`` or a percent_rank bucket)."""
-    from pyspark.sql import functions as F
-
     def spread(c):
         x = c.cast("bigint")
         # out-of-range keys would be silently bit-masked into colliding
@@ -952,8 +909,6 @@ def write_zordered(df: DataFrame, path: str, col_a: str, col_b: str,
     single-column range sort prunes only its own column; the test pins
     that contrast). Same cost shape as :func:`write_range_sorted`: one
     sampled range exchange + per-partition sort."""
-    from pyspark.sql import functions as F
-
     z = zorder_value(F.col(col_a), F.col(col_b)).alias("_z")
     (df.withColumn("_z", z)
      .repartitionByRange(n_files, "_z").sortWithinPartitions("_z")

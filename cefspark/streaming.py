@@ -430,79 +430,6 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
     return l.join(r, cond, how)
 
 
-def conversation_stats_tws(decoded_stream: DataFrame) -> DataFrame:
-    """EXPERIMENTAL. Per-conversation running stats on Spark 4's
-    ``transformWithState`` API — the successor to
-    ``applyInPandasWithState`` with named state variables, TTL, and
-    timers. Semantics are pinned EQUAL to
-    :func:`conversation_stats_stream` (the applyInPandasWithState
-    formulation) in pytest; both shuffle once on conv_id and keep
-    fixed-size per-key state. The experimental label is honest, not
-    boilerplate: this sandbox lacks protobuf AND the RocksDB state-store
-    provider, so the processor body below the probe has never executed
-    anywhere — the dual-branch parity test runs it the first time a
-    deployment carries both deps. Prefer ``conversation_stats_stream``
-    until then.
-
-    Kept alongside the old API deliberately: production clusters on Spark
-    3.x need the applyInPandasWithState form, 4.x+ should prefer this one
-    (state schema evolution + per-state TTL are only available here).
-
-    Environment note: the transformWithState STATE PROTOCOL runs over
-    protobuf; a deployment without the ``protobuf`` package gets a typed
-    NotImplementedError here instead of an opaque
-    `driver worker exited unexpectedly` crash mid-query (this sandbox is
-    such a deployment — the parity test asserts whichever side applies)."""
-    import importlib.util
-
-    try:
-        # find_spec RAISES (not returns None) when the parent 'google'
-        # namespace package itself is absent
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(its state-server protocol); install protobuf or use "
-            "conversation_stats_stream (applyInPandasWithState)")
-    # the operator also requires the RocksDB state store provider — the
-    # default HDFS-backed provider fails the query at start; surface that
-    # as the same typed up-front rejection instead of a mid-query crash
-    provider = decoded_stream.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "") or ""
-    if "RocksDB" not in provider:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the RocksDB state store: "
-            "set spark.sql.streaming.stateStore.providerClass="
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider (or use conversation_stats_stream)")
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Proc(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("stats", _CONV_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, f, last = self._state.get() if self._state.exists() else (0, 0, -1)
-            for pdf in rows:
-                n += len(pdf)
-                f += int(pdf["error"].notna().sum())
-                if len(pdf):
-                    last = max(last, int(pdf["turn_idx"].max()))
-            self._state.update((n, f, last))
-            yield pd.DataFrame({"conv_id": [key[0]], "n_turns": [n],
-                                "n_failed": [f], "last_turn_idx": [last]})
-
-        def close(self) -> None:
-            pass
-
-    return (decoded_stream.groupBy("conv_id")
-            .transformWithStateInPandas(Proc(), CONV_STATS_SCHEMA,
-                                        "Update", "None"))
-
-
 def run_counts_to_table(spark: SparkSession, input_path: str, table,
                         checkpoint: str, query_name: str = "counts_to_table",
                         config: Optional[DecodeConfig] = None,

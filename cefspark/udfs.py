@@ -90,13 +90,11 @@ def make_decode_udf(config: Optional[DecodeConfig] = None,
 
 def decode_dataframe(df: DataFrame, text_col: str = "text",
                      config: Optional[DecodeConfig] = None,
-                     struct_col: str = "cef", flatten: bool = True,
                      columns: Optional[list] = None) -> DataFrame:
     """Decode ``df[text_col]`` CEF payloads; appends the decoded columns.
 
-    With ``flatten=True`` the struct is expanded into top-level columns —
-    Catalyst prunes unused ones and the UDF boundary stays a single
-    projection stage.
+    The UDF's struct is expanded into top-level columns — Catalyst prunes
+    unused ones and the UDF boundary stays a single projection stage.
     """
     udf = make_decode_udf(config, columns)
     out_names = {f.name for f in DECODED_STRUCT.fields} if columns is None else set(columns)
@@ -104,19 +102,15 @@ def decode_dataframe(df: DataFrame, text_col: str = "text",
         out_names = out_names | {config.raw_data_field}
     src = df
     in_text = text_col
-    if flatten:
-        # avoid ambiguous references when the input already carries columns
-        # named like decoded fields (message/name/severity/... are common
-        # log-schema names): input collisions are preserved under _src_<name>
-        collisions = [c for c in df.columns if c in out_names]
-        for c in collisions:
-            src = src.withColumnRenamed(c, f"_src_{c}")
-            if c == text_col:  # the payload column itself may collide
-                in_text = f"_src_{c}"
-    out = src.withColumn(struct_col, udf(F.col(in_text)))
-    if flatten:
-        out = out.select("*", f"{struct_col}.*").drop(struct_col)
-    return out
+    # avoid ambiguous references when the input already carries columns
+    # named like decoded fields (message/name/severity/... are common
+    # log-schema names): input collisions are preserved under _src_<name>
+    for c in [c for c in df.columns if c in out_names]:
+        src = src.withColumnRenamed(c, f"_src_{c}")
+        if c == text_col:  # the payload column itself may collide
+            in_text = f"_src_{c}"
+    return (src.withColumn("cef", udf(F.col(in_text)))
+            .select("*", "cef.*").drop("cef"))
 
 
 def make_encode_udf(config: Optional[EncoderConfig] = None, field_cols: Optional[list] = None,

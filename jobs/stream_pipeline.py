@@ -61,7 +61,7 @@ def main() -> None:
     routed = streaming.routed_stream(stream, spark, cfg)
 
     table = ManifestTable(args.table)
-    before = len(table._chain_manifest_paths())
+    before = len(table.chain())
     q = streaming.exactly_once_sink(
         routed, table, query_name="stream_pipeline",
         checkpoint=args.checkpoint, partition_by=["sink_id"])
@@ -71,7 +71,7 @@ def main() -> None:
         if q.recentProgress and isinstance(q.recentProgress[0], str) \
         else [dict(pr) for pr in (q.recentProgress or [])]
     n_rows = sum(int(pr.get("numInputRows", 0)) for pr in progress)
-    after = len(table._chain_manifest_paths())
+    after = len(table.chain())
     wall = time.time() - t0
     print(json.dumps({
         "n_batches": len(progress),

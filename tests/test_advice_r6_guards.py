@@ -96,11 +96,11 @@ def test_dlq_drain_retry_is_noop(spark, tmp_path):
     still = (table.read_union(spark)
              .withColumn("error", F.lit("still broken")))
     snap1 = drain(spark, table, still, "drain-1")
-    n_manifests = len(table._chain_manifest_paths())
+    n_manifests = len(table.chain())
     # retried drain with the same tag: no new snapshot, same latest
     snap2 = drain(spark, table, still, "drain-1")
     assert snap2.snapshot_id == snap1.snapshot_id
-    assert len(table._chain_manifest_paths()) == n_manifests
+    assert len(table.chain()) == n_manifests
 
 
 def test_upsert_null_key_replaces_not_duplicates(spark, tmp_path):

@@ -993,63 +993,6 @@ def test_png_all_legal_bit_depths_decode():
     assert px[1, :, 0].tolist() == [400, 344]
 
 
-def test_transform_with_state_matches_applyinpandaswithstate(spark, tmp_path):
-    """The transformWithState (Spark 4 stateful API) conversation-stats
-    operator produces the same final per-conversation stats as the
-    applyInPandasWithState formulation across multi-micro-batch drains.
-    Where the environment lacks protobuf (transformWithState's state
-    protocol — this sandbox), the operator must reject with a typed
-    NotImplementedError instead of crashing the streaming query."""
-    import importlib.util
-
-    from pyspark.sql import functions as F
-
-    from cefspark import fixtures, pipeline, streaming
-    from cefspark.udfs import decode_dataframe
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        stream0 = streaming.read_transcript_stream(spark, str(tmp_path))
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming.conversation_stats_tws(
-                decode_dataframe(stream0, columns=["error"]))
-        return
-
-    # the API further needs the RocksDB state store; configure it for this
-    # drain (the operator raises the same typed error when it is absent)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    src = str(tmp_path / "tws_in")
-    sdf = spark.createDataFrame(fixtures.transcripts_pdf(800))
-    sdf.where(F.col("turn_idx") < 4).coalesce(2).write.parquet(src)
-    sdf.where(F.col("turn_idx") >= 4).coalesce(2).write.mode("append").parquet(src)
-
-    stream = streaming.read_transcript_stream(spark, src, max_files_per_trigger=2)
-    decoded = decode_dataframe(stream, columns=["error"])
-    stats = streaming.conversation_stats_tws(decoded)
-    q = (stats.writeStream.format("memory").queryName("twsstats")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["conv_id"]: (r["n_turns"], r["n_failed"], r["last_turn_idx"])
-           for r in spark.sql(
-               "select conv_id, max(n_turns) n_turns, max(n_failed) n_failed,"
-               " max(last_turn_idx) last_turn_idx from twsstats group by conv_id"
-           ).collect()}
-
-    batch = decode_dataframe(sdf)
-    exp = {r["conv_id"]: (r["n"], r["f"], r["l"]) for r in
-           batch.groupBy("conv_id").agg(
-               F.count(F.lit(1)).alias("n"),
-               F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("f"),
-               F.max("turn_idx").alias("l")).collect()}
-    assert got == exp
-    assert all(v[0] == 8 for v in got.values())
-
-
 def test_ieee_float_wav_decodes():
     """Format-3 (IEEE float32) WAVs parse and produce the same RMS envelope
     as the equivalent PCM blob (the float sawtooth is the int sawtooth /
@@ -1368,7 +1311,7 @@ def test_exactly_once_sink_idempotent_under_replay(spark, tmp_path):
         F.col("event_id") % 4 <= 1).collect()}
     got = {r["event_id"] for r in table.read_union(spark).collect()}
     assert got == expected
-    n_snaps = len(table._chain_manifest_paths())
+    n_snaps = len(table.chain())
     assert n_snaps == 2  # one snapshot per micro-batch
 
     # simulate at-least-once redelivery: re-commit batch 0 by hand — the
@@ -1383,7 +1326,7 @@ def test_exactly_once_sink_idempotent_under_replay(spark, tmp_path):
             return
         table.commit(df, inputs=[t])
     replay(batch0, 0)
-    assert len(table._chain_manifest_paths()) == n_snaps
+    assert len(table.chain()) == n_snaps
     assert {r["event_id"] for r in table.read_union(spark).collect()} == expected
 
     # checkpoint resume with no new data: nothing commits
@@ -1392,7 +1335,7 @@ def test_exactly_once_sink_idempotent_under_replay(spark, tmp_path):
          .option("maxFilesPerTrigger", 1).parquet(src)),
         table, "eo_sink", ckpt)
     q2.awaitTermination(120)
-    assert len(table._chain_manifest_paths()) == n_snaps
+    assert len(table.chain()) == n_snaps
 
     # new file arrives -> resumed query commits exactly the delta
     events.where(F.col("event_id") % 4 == 2).coalesce(1) \
@@ -1405,7 +1348,7 @@ def test_exactly_once_sink_idempotent_under_replay(spark, tmp_path):
     got3 = {r["event_id"] for r in table.read_union(spark).collect()}
     assert got3 == {r["event_id"] for r in events.where(
         F.col("event_id") % 4 <= 2).collect()}
-    assert len(table._chain_manifest_paths()) == n_snaps + 1
+    assert len(table.chain()) == n_snaps + 1
 
 
 def _sine_wav(sr, n, freqs_amps, channels=1):
@@ -1643,14 +1586,14 @@ def test_run_failures_to_dlq_streaming_lane(spark, tmp_path):
     queue = table.read_union(spark)
     assert {r["payload"] for r in queue.collect()} == expected
     assert queue.count() == len(expected)          # exactly once
-    n_snaps = len(table._chain_manifest_paths())
+    n_snaps = len(table.chain())
     assert n_snaps == 2                            # one per micro-batch
 
     # resume from the checkpoint with no new data: no new snapshots
     q2 = streaming.run_failures_to_dlq(spark, src, table, ckpt,
                                        max_files_per_trigger=1)
     q2.awaitTermination(120)
-    assert len(table._chain_manifest_paths()) == n_snaps
+    assert len(table.chain()) == n_snaps
     assert table.read_union(spark).count() == len(expected)
 
     # the streamed queue replays through the batch API (all unfixable here)

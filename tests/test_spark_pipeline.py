@@ -543,7 +543,7 @@ def test_concurrent_commits_serialize_no_lost_append(spark, tmp_path):
     assert parents != [root.snapshot_id, root.snapshot_id], "lost append!"
     assert set(parents) - {root.snapshot_id} <= set(ids)
     # LATEST points at the chain head and the union view sees every commit
-    chain = table._chain_manifest_paths()
+    chain = table.chain()
     assert len(chain) == 3
     assert table.read_union(spark).count() == 20
     # lockfile released
@@ -1410,7 +1410,7 @@ def test_upsert_and_delete_where_cow_semantics(spark, tmp_path):
     got = {r["k"]: r["v"] for r in t.read_union(spark).collect()}
     assert got == {1: 10, 2: 99, 3: 30, 4: 40, 5: 50}
     assert snap.parent_id is None          # re-rooted: no double count
-    assert t._chain_inputs() == ["file:///in1", "file:///in2"]
+    assert sorted(t.consumed_inputs()) == ["file:///in1", "file:///in2"]
 
     # pre-upsert state still time-travelable
     old = {r["k"]: r["v"]
@@ -1428,6 +1428,58 @@ def test_upsert_and_delete_where_cow_semantics(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         ManifestTable(str(tmp_path / "empty")).delete_where(spark, "v = 1")
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "upsert", "delete_where",
+                                     "drain"])
+def test_rewrite_is_rerooted_when_latest_flips(spark, tmp_path, monkeypatch,
+                                               rewrite):
+    """A whole-table rewrite must never be visible chained to the history
+    it already contains: whenever LATEST flips, the manifest it names has
+    no parent, and its chain holds the rewritten table's rows once.
+    Publishing the rewrite with the old chain as its parent and re-rooting
+    it in a second manifest write double-counts every row through
+    read_union in between, and for good if the process dies there."""
+    from cefspark import dlq
+
+    schema = "dlq_id long, payload string, dlq_error string"
+    table = ManifestTable(str(tmp_path / "t"))
+    for i in range(3):
+        table.commit(spark.range(10 * i, 10 * i + 10).select(
+            F.col("id").alias("dlq_id"),
+            F.concat(F.lit("p"), F.col("id").cast("string")).alias("payload"),
+            F.lit("bad").alias("dlq_error")), inputs=[f"mem://{i}"])
+
+    flips = []
+    real_rename = os.rename
+
+    def rename(src, dst):
+        real_rename(src, dst)
+        if os.path.basename(dst) == "LATEST":
+            chain = table.chain()
+            flips.append((chain[0].parent_id, sum(s.n_rows for s in chain)))
+
+    monkeypatch.setattr(storage.os, "rename", rename)
+    if rewrite == "compact":
+        table.compact(spark)
+        expected = 30
+    elif rewrite == "upsert":
+        table.upsert(spark, spark.createDataFrame(
+            [(3, "p3", "fixed"), (30, "p30", "new")], schema), ["dlq_id"])
+        expected = 31
+    elif rewrite == "delete_where":
+        table.delete_where(spark, "dlq_id < 5")
+        expected = 25
+    else:
+        still = table.read_union(spark).withColumn(
+            "error", F.lit(None).cast("string"))
+        dlq.drain(spark, table, still, "drain-1")
+        expected = 30
+    monkeypatch.undo()
+
+    assert flips == [(None, expected)]
+    assert table.read_union(spark).count() == expected
+    assert {"mem://0", "mem://1", "mem://2"} <= table.consumed_inputs()
 
 
 def test_useragent_ordering_and_nulls(spark):
