@@ -25,6 +25,7 @@ import time
 from dataclasses import dataclass
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,11 +55,22 @@ def severity_band_rows() -> list[tuple[str, str]]:
 
 
 def vendor_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(VENDOR_TIERS, "deviceVendor string, vendor_tier string")
+    """deviceVendor -> vendor_tier. Built from a pandas frame so that, with
+    the session's Arrow setting, it plans as a ``LocalRelation``: its
+    broadcast then runs no Python. Built from a list, the leaf would be a
+    ``LogicalRDD`` over a Python RDD, and every action (every streaming
+    micro-batch too) would pay a Python job to broadcast 10 rows."""
+    return spark.createDataFrame(
+        pd.DataFrame(VENDOR_TIERS, columns=["deviceVendor", "vendor_tier"]),
+        "deviceVendor string, vendor_tier string")
 
 
 def severity_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(severity_band_rows(), "severity string, severity_band string")
+    """severity -> severity_band, a ``LocalRelation`` for the same reason as
+    :func:`vendor_lookup_df`: no Python job per broadcast."""
+    return spark.createDataFrame(
+        pd.DataFrame(severity_band_rows(), columns=["severity", "severity_band"]),
+        "severity string, severity_band string")
 
 
 # --- stages -------------------------------------------------------------------
@@ -197,14 +209,16 @@ def sink_counts(routed: DataFrame, ts_col: str = "ts",
     )
 
 
-def counts_scalars(counts: DataFrame) -> tuple[int, int]:
-    """(n_input, n_failed) from a (materialized) sink_counts relation — the
-    single shared driver-bounded report aggregation."""
+def counts_scalars(counts: DataFrame) -> tuple[int, int, int]:
+    """(n_input, n_failed, n_sinks) from a (materialized) sink_counts
+    relation — the single shared driver-bounded report aggregation, one
+    job."""
     agg = counts.agg(
         F.sum("n_events").alias("n"),
         F.sum(F.when(F.col("sink_id") == FAILURE_SINK, F.col("n_events"))
-              .otherwise(F.lit(0))).alias("nf")).first()
-    return int(agg["n"] or 0), int(agg["nf"] or 0)
+              .otherwise(F.lit(0))).alias("nf"),
+        F.countDistinct("sink_id").alias("ns")).first()
+    return int(agg["n"] or 0), int(agg["nf"] or 0), int(agg["ns"])
 
 
 #: the scan's source file, carried from below the resume anti-join and the
@@ -282,8 +296,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         # materialize the (tiny) agg once; the scalar/top-k jobs and the
         # commit below then read the checkpoint instead of re-running the decode
         counts = sink_counts(routed).localCheckpoint(eager=True)
-        n_input, n_failed = counts_scalars(counts)
-        n_sinks = counts.select("sink_id").distinct().count()
+        n_input, n_failed, n_sinks = counts_scalars(counts)
         top = (counts.groupBy("sink_id").agg(F.sum("n_events").alias("n_events"))
                .orderBy(F.desc("n_events"), F.asc("sink_id")).limit(top_k).collect())
         lin = lineage(routed).count() if collect_lineage else 0

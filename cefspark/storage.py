@@ -739,7 +739,7 @@ def dedup_ingest(spark: SparkSession, corpus: "ManifestTable",
     fingerprints.commit(
         committed.select(F.md5(F.col(text_col)).alias("fp")),
         inputs=[], lock_timeout=lock_timeout)
-    n_ingested = committed.count()
+    n_ingested = snap.n_rows
     n_unique = in_batch.count()
     return {
         "n_batch": n_batch,
@@ -822,13 +822,28 @@ def incremental_rollup(spark: SparkSession, source: "ManifestTable",
     aggregates (exact medians) need the raw scan and are deliberately out
     of scope.
 
+    A whole-table rewrite of the source (``compact``, ``upsert``,
+    ``delete_where``) publishes a new root snapshot holding every row. When
+    the chain's root is a snapshot the rollup has never folded, the run
+    rebuilds the rollup from the whole chain and publishes it with
+    :meth:`ManifestTable.replace`, its ledger naming the chain's snapshots
+    only. ``expire_snapshots`` keeps the id of the snapshot it re-roots, so
+    after an expiry the rollup keeps its totals for the expired snapshots
+    and folds only the new ones. Roll up before expiring: an expiry that
+    drops snapshots not yet folded leaves an unfolded root, which the run
+    takes for a rewrite.
+
     Returns ``{"n_new_snapshots", "n_groups", "snapshot_id"}`` (scalars
     only). Idempotent: a run with no new snapshots commits nothing."""
     sk_col = f"{distinct_col}_hll" if distinct_col else None
     done = {t for t in rollup.consumed_inputs()
             if t.startswith("snapshot://")}
-    chain = [s for s in source.chain()
-             if f"snapshot://{s.snapshot_id}" not in done]
+    full = source.chain()
+    # an unfolded root under a folded history: the source was rewritten
+    rebuild = bool(done and full
+                   and f"snapshot://{full[-1].snapshot_id}" not in done)
+    chain = full if rebuild else [
+        s for s in full if f"snapshot://{s.snapshot_id}" not in done]
     if not chain:
         return {"n_new_snapshots": 0, "n_groups": 0,
                 "snapshot_id": rollup.latest_snapshot_id()}
@@ -860,18 +875,19 @@ def incremental_rollup(spark: SparkSession, source: "ManifestTable",
                     f"rollup chain carries sketch column(s) {extra}: pass "
                     "the same distinct_col on every run (omitting it would "
                     "silently drop the accumulated sketches)")
+    if prev is not None and not rebuild:
         carry = [count_col] + ([sk_col] if distinct_col else [])
         merges = [F.sum(count_col).cast("long").alias(count_col)]
         if distinct_col:
             merges.append(F.hll_union_agg(sk_col).alias(sk_col))
         agg = (agg.unionByName(prev.select(*group_cols, *carry))
                .groupBy(*group_cols).agg(*merges))
-    snap = rollup.commit(
+    publish = rollup.replace if rebuild else rollup.commit
+    snap = publish(
         agg, inputs=[f"snapshot://{s.snapshot_id}" for s in chain],
         lock_timeout=lock_timeout)
-    merged = rollup.read(spark, snap.snapshot_id)
     return {"n_new_snapshots": len(chain),
-            "n_groups": merged.count(),
+            "n_groups": snap.n_rows,
             "snapshot_id": snap.snapshot_id}
 
 

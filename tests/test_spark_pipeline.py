@@ -1322,6 +1322,84 @@ def test_incremental_rollup_equals_full_recompute(spark, tmp_path):
     assert rollup_dict() == exact_dict()
 
 
+def test_incremental_rollup_rebuilds_after_source_rewrite(spark, tmp_path):
+    """A whole-table rewrite of the source (compact, delete_where) re-roots
+    its chain under a new snapshot holding every row. The next maintenance
+    run must rebuild the rollup from that chain, not add the whole table to
+    the previous totals; later appends merge as before."""
+    from cefspark.storage import ManifestTable, incremental_rollup
+
+    src = ManifestTable(str(tmp_path / "facts"))
+    roll = ManifestTable(str(tmp_path / "rollup"))
+
+    def facts(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("event_id"),
+            (F.col("id") % 3).cast("string").alias("g"))
+
+    def rollup_dict():
+        return {r["g"]: r["n_events"] for r in roll.read(spark).collect()}
+
+    def exact_dict():
+        return {r["g"]: r["n"] for r in src.read_union(spark).groupBy("g")
+                .agg(F.count("*").alias("n")).collect()}
+
+    def ledger():
+        return {t for t in roll.consumed_inputs() if t.startswith("snapshot://")}
+
+    src.commit(facts(0, 30))
+    src.commit(facts(30, 60))
+    incremental_rollup(spark, src, roll, ["g"])
+    assert rollup_dict() == {"0": 20, "1": 20, "2": 20}
+
+    root = src.compact(spark)
+    m = incremental_rollup(spark, src, roll, ["g"])
+    assert m["n_new_snapshots"] == 1 and m["n_groups"] == 3
+    assert rollup_dict() == {"0": 20, "1": 20, "2": 20} == exact_dict()
+    assert ledger() == {f"snapshot://{root.snapshot_id}"}
+    assert roll.snapshot().parent_id is None  # published re-rooted
+    assert incremental_rollup(spark, src, roll, ["g"])["n_new_snapshots"] == 0
+
+    src.commit(facts(60, 90))
+    incremental_rollup(spark, src, roll, ["g"])
+    assert rollup_dict() == {"0": 30, "1": 30, "2": 30} == exact_dict()
+
+    src.delete_where(spark, "event_id < 6")
+    incremental_rollup(spark, src, roll, ["g"])
+    assert rollup_dict() == {"0": 28, "1": 28, "2": 28} == exact_dict()
+
+
+def test_incremental_rollup_keeps_totals_after_source_expiry(spark, tmp_path):
+    """expire_snapshots keeps the id of the snapshot it re-roots, so it is
+    no rewrite: the rollup keeps its totals for the expired snapshots and
+    the next run folds only the new append."""
+    from cefspark.storage import ManifestTable, incremental_rollup
+
+    src = ManifestTable(str(tmp_path / "facts"))
+    roll = ManifestTable(str(tmp_path / "rollup"))
+
+    def facts(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("event_id"),
+            (F.col("id") % 3).cast("string").alias("g"))
+
+    def rollup_dict():
+        return {r["g"]: r["n_events"] for r in roll.read(spark).collect()}
+
+    src.commit(facts(0, 30))
+    src.commit(facts(30, 60))
+    incremental_rollup(spark, src, roll, ["g"])
+    assert len(src.expire_snapshots(keep_last=1, orphan_grace_seconds=0)) == 1
+    assert incremental_rollup(spark, src, roll, ["g"])["n_new_snapshots"] == 0
+    assert rollup_dict() == {"0": 20, "1": 20, "2": 20}
+
+    src.commit(facts(60, 90))
+    m = incremental_rollup(spark, src, roll, ["g"])
+    assert m["n_new_snapshots"] == 1 and m["n_groups"] == 3
+    assert rollup_dict() == {"0": 30, "1": 30, "2": 30}
+    assert roll.snapshot().parent_id is not None  # merged, not rebuilt
+
+
 def test_read_union_tolerates_schema_evolution_and_partitioned_snapshots(spark, tmp_path):
     """Per-dir snapshot reads: a later commit may add a column (earlier
     rows read as NULL) and snapshots may be partitioned — both shapes a
@@ -2341,3 +2419,147 @@ def test_parse_date_field_multi_format(spark):
     cfg = apply_filters(df.limit(1), [
         {"date": {"match": ["yyyy-MM-dd HH:mm:ss"], "target": "ts2"}}])
     assert cfg.collect()[0]["ts2"] == want
+
+
+# --- enrich dims as local relations; commit row counts ----------------------
+
+#: edge rows for enrich: a known vendor, an unknown vendor, an empty vendor,
+#: severity "11" (no band), a word severity, and three parse failures
+ENRICH_EDGE_LINES = [
+    "CEF:0|security|threatmanager|1.0|100|known|10|src=10.0.0.1",
+    "CEF:0|NoSuchVendor|p|1.0|100|unknown vendor|5|src=10.0.0.2",
+    "CEF:0||p|1.0|100|empty vendor|3|src=10.0.0.3",
+    "CEF:0|acme|p|1.0|100|severity eleven|11|src=10.0.0.4",
+    "CEF:0|Imperva|p|1.0|100|word severity|High|",
+    "garbage", "", "CEF:0|a|b",
+]
+
+
+def _enrich_with_list_dims(decoded, spark):
+    """enrich as it stood with list-built dimension tables (each a Python
+    RDD leaf): the reference the local-relation dims must reproduce."""
+    vendors = spark.createDataFrame(
+        pipeline.VENDOR_TIERS, "deviceVendor string, vendor_tier string")
+    bands = spark.createDataFrame(
+        pipeline.severity_band_rows(), "severity string, severity_band string")
+    return (decoded
+            .join(F.broadcast(vendors), on="deviceVendor", how="left")
+            .join(F.broadcast(bands), on="severity", how="left")
+            .withColumn("vendor_tier", F.coalesce("vendor_tier", F.lit("unknown")))
+            .withColumn("severity_band", F.coalesce("severity_band", F.lit("unknown"))))
+
+
+def test_enrich_matches_list_built_dims(spark):
+    """Same rows, column order and schema as the list-built join, over an
+    unknown vendor, a NULL vendor, severity "11" and parse failures."""
+    lines = pd.DataFrame({"conv_id": range(len(ENRICH_EDGE_LINES)),
+                          "text": ENRICH_EDGE_LINES})
+    decoded = (decode_dataframe(spark.createDataFrame(lines))
+               .select("conv_id", "deviceVendor", "severity", "error"))
+    # decode never yields a NULL vendor without an error; add one by hand
+    decoded = decoded.unionByName(spark.createDataFrame(
+        [(99, None, "7", None)],
+        "conv_id long, deviceVendor string, severity string, error string"))
+    got, want = pipeline.enrich(decoded, spark), _enrich_with_list_dims(decoded, spark)
+    assert got.columns == want.columns
+    assert got.schema == want.schema
+    rows = sorted(got.collect(), key=lambda r: r["conv_id"])
+    assert rows == sorted(want.collect(), key=lambda r: r["conv_id"])
+    by_id = {r["conv_id"]: (r["vendor_tier"], r["severity_band"]) for r in rows}
+    assert by_id[0] == ("tier1", "high")
+    assert by_id[1] == ("unknown", "med")
+    assert by_id[3] == ("tier3", "unknown")      # severity "11" has no band
+    assert by_id[5] == ("unknown", "unknown")    # parse failure
+    assert by_id[99] == ("unknown", "high")      # NULL vendor
+
+
+def test_enrich_dims_plan_as_local_relations(spark, tmp_path):
+    """Both broadcast sides of route(enrich(...)) are local table scans: no
+    Python-RDD leaf, so a broadcast runs no Python job."""
+    path = str(tmp_path / "in")
+    spark.createDataFrame(fixtures.transcripts_pdf(50)).write.parquet(path)
+    routed = pipeline.route(pipeline.enrich(
+        decode_dataframe(spark.read.parquet(path)), spark))
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("LocalTableScan") == 2
+    assert "Scan ExistingRDD" not in plan
+    assert plan.count("BroadcastHashJoin") == 2
+
+
+@pytest.mark.parametrize("layout", ["plain", "partition_by", "sort_cols",
+                                    "empty", "no_partitions"])
+def test_commit_counts_rows_in_its_write(spark, tmp_path, layout):
+    """commit's n_rows equals a read-back count of the snapshot, for every
+    write layout and for empty frames."""
+    df = spark.range(0, 1000, numPartitions=4).select(
+        "id", (F.col("id") % 7).cast("string").alias("k"))
+    kwargs = {"partition_by": {"partition_by": ["k"]},
+              "sort_cols": {"sort_cols": ["id"], "n_files": 3}}.get(layout, {})
+    if layout == "empty":
+        df = df.where("id < 0")
+    elif layout == "no_partitions":
+        df = spark.range(0).select("id", F.lit("x").alias("k"))
+    snap = ManifestTable(str(tmp_path / "t")).commit(df, **kwargs)
+    back = spark.read.schema(df.schema).parquet(snap.data_dir).count()
+    assert snap.n_rows == back == (0 if layout in ("empty", "no_partitions") else 1000)
+
+
+def test_exactly_once_sink_manifests_sum_to_rows_fed(spark, tmp_path):
+    """Each micro-batch's manifest carries its row count; over the chain
+    they sum to the rows fed."""
+    from cefspark import streaming
+
+    src = str(tmp_path / "in")
+    for lo in (0, 300, 700):
+        spark.range(lo, lo + 100 + lo // 10).coalesce(1).write.mode(
+            "append").parquet(src)
+    fed = spark.read.parquet(src).count()
+    table = ManifestTable(str(tmp_path / "t"))
+    stream = (spark.readStream.schema("id long")
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    q = streaming.exactly_once_sink(stream, table, "eo_counts",
+                                    str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    chain = table.chain()
+    assert len(chain) == 3
+    assert sum(s.n_rows for s in chain) == fed == table.read_union(spark).count()
+
+
+_RETRY_SCRIPT = """
+import sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+from cefspark.storage import ManifestTable
+
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+
+@F.udf("long")
+def flaky(x):
+    ctx = TaskContext.get()
+    # fail the first attempt of partition 0 mid-way, after some of its
+    # rows have been processed
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and x == 150:
+        raise RuntimeError("injected task failure")
+    return x
+
+df = spark.range(0, 400, numPartitions=2).select(flaky("id").alias("id"))
+snap = ManifestTable(sys.argv[1]).commit(df)
+print(snap.n_rows, spark.read.parquet(snap.data_dir).count())
+spark.stop()
+"""
+
+
+def test_commit_count_exact_under_task_retry(tmp_path):
+    """A task that fails after some rows and is retried is counted once:
+    n_rows equals the read-back (local[2,2]: two attempts)."""
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    r = subprocess.run([sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path / "t")],
+                       capture_output=True, text=True, timeout=300, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "injected task failure" in r.stderr  # the retry really happened
+    n_rows, back = map(int, r.stdout.split()[-2:])
+    assert n_rows == back == 400
