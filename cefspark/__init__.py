@@ -34,8 +34,40 @@ Spark-first parse -> enrich -> route -> aggregate pipeline:
 * ``cefspark.dlq``        — dead-letter queue: quarantine / fix-and-replay / drain
 * ``cefspark.config``     — declarative filter-chain compiler (logstash-config shape)
 
+Importing the package on Python < 3.13 makes ``zipimport.zipimporter.
+invalidate_caches`` re-read an archive's directory only when the archive's
+stat changed: PySpark's worker set-up calls ``importlib.invalidate_caches()``
+on every Python UDF evaluation, and before 3.13 that re-reads pyspark.zip once
+per cached zipimporter. The decode and encode UDFs import this package in
+every worker, so worker reuse keeps the guard for all later tasks.
+
 Everything here derives only from public knowledge: the Apache Spark / PySpark
 API and the behavior of the public reference repo.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+if sys.version_info < (3, 13):
+    # Before 3.13 (which only drops the cache), zipimporter.invalidate_caches
+    # re-reads the whole archive directory in pure Python: ~10 ms per
+    # importer for pyspark.zip, times 16 importers, on every UDF evaluation.
+    # Keep the stdlib behaviour whenever the archive's stat differs from what
+    # this importer last read (or cannot be taken); skip the read otherwise.
+    import os as _os
+    import zipimport as _zipimport
+
+    _stdlib_invalidate = _zipimport.zipimporter.invalidate_caches
+
+    def _invalidate_if_changed(self):
+        try:
+            st = _os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            _stdlib_invalidate(self)
+            self._read_stamp = stamp
+
+    _zipimport.zipimporter.invalidate_caches = _invalidate_if_changed

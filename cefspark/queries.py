@@ -113,9 +113,11 @@ def _spread(spark: SparkSession, df: DataFrame,
 #: registry queries construct the base scans repeatedly inside the timed
 #: region. This caches METADATA ONLY — query plans and data are rebuilt and
 #: recomputed per invocation (no result/intermediate caching); it is the
-#: same metadata caching a metastore-backed table gets for free, and the
-#: staleness model equals Spark's own per-session file-index cache. Keyed
-#: weakly by the live session so a fresh session re-infers.
+#: same metadata caching a metastore-backed table gets for free. Each entry
+#: also holds the path's (mtime, inode): an in-session overwrite changes
+#: them, so a changed stat, or one that cannot be taken, re-infers instead
+#: of serving the old schema. Keyed weakly by the live session so a fresh
+#: session re-infers.
 import weakref  # noqa: E402
 
 _SCAN_META: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -125,12 +127,17 @@ def _scan(spark: SparkSession, path: str,
           spread_key: Optional[str] = None) -> DataFrame:
     per_session = _SCAN_META.setdefault(spark, {})
     ent = per_session.get(path)
-    if ent is None:
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_ino)
+    except OSError:
+        stamp = None
+    if ent is None or stamp is None or ent[2] != stamp:
         df = spark.read.parquet(path)
         out = _spread(spark, df, key=spread_key)
-        per_session[path] = (df.schema, out is not df)
+        per_session[path] = (df.schema, out is not df, stamp)
         return out
-    sch, fanned = ent
+    sch, fanned, _ = ent
     df = spark.read.schema(sch).parquet(path)
     if fanned:
         df = df.repartition(spark.sparkContext.defaultParallelism,

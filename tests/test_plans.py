@@ -482,6 +482,28 @@ def test_scan_metadata_cache_schema_and_decision(spark, tmp_path):
     assert "InMemoryRelation" not in plan_of(second)
 
 
+def test_scan_metadata_cache_reinfers_after_overwrite(spark, tmp_path):
+    """An in-session overwrite of a scanned path with a wider schema is seen
+    by the next _scan: the cached schema must not drop the new column."""
+    import pandas as pd
+
+    from cefspark import queries as q
+
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        pd.DataFrame({"id": range(100), "s": ["x"] * 100})
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    assert q._scan(spark, p).columns == ["id", "s"]
+
+    spark.createDataFrame(
+        pd.DataFrame({"id": range(50), "s": ["y"] * 50, "extra": [1.5] * 50})
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    again = q._scan(spark, p)
+    assert again.schema == spark.read.parquet(p).schema
+    assert again.columns == ["id", "s", "extra"]
+    assert again.where("extra = 1.5").count() == 50
+
+
 def test_stream_microbatch_fanout_rule(spark, tmp_path):
     """r7: the streaming micro-batch fan-out must fire exactly when the
     per-trigger file cap times row-groups-per-file cannot feed the pool,

@@ -5,6 +5,7 @@ stable (conv_id, turn_idx) ordering; routed-row equality; per-sink counts.)"""
 
 import os
 import subprocess
+import sys
 import time
 
 import pandas as pd
@@ -2563,3 +2564,71 @@ def test_commit_count_exact_under_task_retry(tmp_path):
     assert "injected task failure" in r.stderr  # the retry really happened
     n_rows, back = map(int, r.stdout.split()[-2:])
     assert n_rows == back == 400
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="the stdlib invalidation is lazy from 3.13 on")
+def test_zipimporter_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Importing cefspark makes zipimporter.invalidate_caches skip the
+    directory read while the archive is unchanged, and keeps every importer
+    of a rewritten archive re-reading it."""
+    import zipfile
+    import zipimport
+
+    import cefspark  # noqa: F401  (installs the guard)
+
+    path = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("m_a.py", "A = 1\n")
+    importers = [zipimport.zipimporter(path), zipimport.zipimporter(path)]
+    for zi in importers:
+        zi.invalidate_caches()          # an importer's first call reads
+
+    reads, real = [], zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or real(p))
+    for zi in importers:
+        zi.invalidate_caches()
+    assert reads == []
+    assert all(zi.find_spec("m_a") is not None for zi in importers)
+
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("m_a.py", "A = 1\n")
+        z.writestr("m_b.py", "B = 2\n")
+    for zi in importers:
+        zi.invalidate_caches()
+    assert reads == [path] * len(importers)
+    assert all(zi.find_spec("m_b") is not None for zi in importers)
+
+
+def test_udf_worker_skips_unchanged_zip_directory_reads(spark):
+    """Inside a UDF worker that has imported cefspark, a repeated
+    importlib.invalidate_caches() reads no zip directory."""
+    lines = spark.createDataFrame(pd.DataFrame(
+        {"conv_id": range(8), "text": ENRICH_EDGE_LINES[:1] * 8}))
+    decode_dataframe(lines).select("deviceVendor").collect()
+
+    @F.pandas_udf("second_reads long, zip_importers long")
+    def probe(text: pd.Series) -> pd.DataFrame:
+        import importlib
+        import zipimport
+
+        decode_batch(text)  # a cefspark UDF, as decode_cef is
+        n_zip = sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+        reads, real = [], zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+            reads.clear()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        return pd.DataFrame({"second_reads": [len(reads)] * len(text),
+                             "zip_importers": [n_zip] * len(text)})
+
+    rows = (lines.repartition(2).select(probe("text").alias("p"))
+            .select("p.*").collect())
+    if max(r["zip_importers"] for r in rows) == 0:
+        pytest.skip("pyspark is imported from a directory, not from a zip")
+    assert [r["second_reads"] for r in rows] == [0] * len(rows)
