@@ -3,10 +3,13 @@ r"""Vectorized CEF decode: batches of payload strings -> batches of events.
 This is a from-scratch pandas/NumPy implementation of the decode semantics of
 the reference codec (/root/reference/lib/logstash/codecs/cef.rb:231-327). It is
 pure pandas — testable without Spark — and is wrapped into an Arrow-batched
-pandas UDF by :mod:`cefspark.udfs`. The hot path (`_decode_batch_fast`) does
-two C-level regex calls per row; `_decode_batch_pandas` is the sequential
-implementation of record, kept for differential testing against the hot path
-(mirroring the reference's scanning parser at cef.rb:253-305).
+pandas UDF by :mod:`cefspark.udfs` — the one place a payload crosses from the
+engine into Python. The hot path (`decode_batch`) does two C-level regex
+calls per row and also takes binary payloads, doing the reference's strict
+UTF-8 validation (D4, cef.rb:236-240) itself; `_decode_batch_pandas` is the
+sequential, str-only implementation of record, kept for differential testing
+against the hot path (mirroring the reference's scanning parser at
+cef.rb:253-305).
 
 Grammar constants are behavioral transcriptions of the reference's regexes
 (cef.rb:103-140); Python 3.11 `re` supports the possessive/atomic constructs
@@ -25,7 +28,7 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
-from .mappings import PARSE_FAILURE_TAG, Mappings, get_mappings
+from .mappings import HEADER_COLUMNS, PARSE_FAILURE_TAG, Mappings, get_mappings
 from . import timestamps as ts_mod
 
 # --- grammar ----------------------------------------------------------------
@@ -120,16 +123,17 @@ class DecodeConfig:
         return get_mappings(self.ecs_mode, False, self.device)
 
 
-#: decoded-event frame columns (beyond pass-through input columns)
-DECODED_COLUMNS = [
-    "cefVersion", "deviceVendor", "deviceProduct", "deviceVersion",
-    "deviceEventClassId", "name", "severity", "syslog",
-    "extensions", "message", "tags", "error",
-]
+#: decoded-event frame columns (beyond pass-through input columns); the one
+#: list of them — udfs.DECODED_STRUCT takes its field names and order from it
+DECODED_COLUMNS = [*HEADER_COLUMNS, "syslog", "extensions", "message", "tags", "error"]
+
+#: D4 failure reason for a binary payload that is not valid UTF-8 (cef.rb:236-240)
+INVALID_UTF8_ERROR = "invalid byte sequence in UTF-8"
 
 
-def _count_headers(data: str) -> int:
-    """How many pipe-terminated headers exist — failure-message parity (cef.rb:253-257)."""
+def _count_headers(data: str) -> tuple[int, int]:
+    """How many pipe-terminated headers exist (up to 7), and where the last
+    one ends — failure-message parity (cef.rb:253-257)."""
     n, pos = 0, 0
     while n < 7:
         m = HEADER_NEXT_FIELD_PATTERN.search(data, pos)
@@ -137,7 +141,7 @@ def _count_headers(data: str) -> int:
             break
         pos = m.end()
         n += 1
-    return n
+    return n, pos
 
 
 def parse_extension_block(message: str) -> tuple[Optional[dict], Optional[str]]:
@@ -170,13 +174,7 @@ def desanitize_extension_val(value: str) -> str:
 
 def _classify_failure(s: str) -> str:
     """Diagnose why a payload failed (slow path, failed rows only)."""
-    pos, cnt = 0, 0
-    while cnt < 7:
-        m = HEADER_NEXT_FIELD_PATTERN.search(s, pos)
-        if m is None:
-            break
-        pos = m.end()
-        cnt += 1
+    cnt, pos = _count_headers(s)
     if cnt < 7:
         return f"message is not valid CEF; found {cnt} of 7 required pipe-terminated header fields"
     msg = s[pos:].strip(_RUBY_STRIP)
@@ -190,6 +188,12 @@ def _classify_failure(s: str) -> str:
 def decode_batch(texts: pd.Series, config: Optional[DecodeConfig] = None,
                  columns: Optional[list] = None) -> pd.DataFrame:
     """Decode a batch of CEF payload strings into an event frame.
+
+    ``texts`` holds ``str`` payloads; ``bytes``/``bytearray`` payloads are
+    decoded as strict UTF-8 first (D4, cef.rb:236-240), and an invalid byte
+    sequence fails the row with ``INVALID_UTF8_ERROR``, its ``message`` the
+    replacement-char rendering of the bytes; any other value is a
+    ``"null payload"`` failure.
 
     Output columns: the 7 header fields (physical long names), ``syslog``,
     ``extensions`` (dict of canonical-field-name -> string value, None on
@@ -206,13 +210,9 @@ def decode_batch(texts: pd.Series, config: Optional[DecodeConfig] = None,
     output column (error/tags/message fire on grammar alone). With
     ``ecs_mode`` the KV pass always runs: a bad timestamp must still flip
     the row to a failure event.
+
+    This is the hot path: one possessive mega-regex fullmatch per row.
     """
-    return _decode_batch_fast(texts, config, columns=columns)
-
-
-def _decode_batch_fast(texts: pd.Series, config: Optional[DecodeConfig] = None,
-                       columns: Optional[list] = None) -> pd.DataFrame:
-    """Single-pass hot path: one possessive mega-regex fullmatch per row."""
     cfg = config or DecodeConfig()
     maps = cfg.mappings()
     decode_map = maps.decode_map
@@ -241,22 +241,28 @@ def _decode_batch_fast(texts: pd.Series, config: Optional[DecodeConfig] = None,
     parse_ext = (normalizer is not None or columns is None
                  or "extensions" in columns)
     # column arrays hoisted out of the loop (r7, guide §4.2: per-row dict
-    # lookups were ~10% of the loop body)
-    c_ver = cols["cefVersion"]; c_vendor = cols["deviceVendor"]  # noqa: E702
-    c_prod = cols["deviceProduct"]; c_dver = cols["deviceVersion"]  # noqa: E702
-    c_cls = cols["deviceEventClassId"]; c_name = cols["name"]  # noqa: E702
-    c_sev = cols["severity"]; c_syslog = cols["syslog"]  # noqa: E702
-    c_ext = cols["extensions"]; c_msg = cols["message"]  # noqa: E702
-    c_tags = cols["tags"]; c_err = cols["error"]  # noqa: E702
+    # lookups were ~10% of the loop body), in DECODED_COLUMNS order
+    (c_ver, c_vendor, c_prod, c_dver, c_cls, c_name, c_sev, c_syslog,
+     c_ext, c_msg, c_tags, c_err) = [cols[c] for c in DECODED_COLUMNS]
     c_raw = cols[cfg.raw_data_field] if cfg.raw_data_field else None
 
     for i in range(n):
         raw = arr[i]
         err = None
-        failure_payload = raw if isinstance(raw, str) else None
         if not isinstance(raw, str):
-            err = "null payload"
-        else:
+            if isinstance(raw, (bytes, bytearray)):
+                # D4 strict UTF-8 (cef.rb:236-240): the decoded str goes on
+                # as the payload; invalid bytes fail early, before the quote
+                # strip, carrying their replacement-char rendering
+                try:
+                    raw = raw.decode("utf-8")
+                except UnicodeDecodeError:
+                    err = INVALID_UTF8_ERROR
+                    failure_payload = raw.decode("utf-8", "replace")
+            else:
+                err = "null payload"
+                failure_payload = None
+        if err is None:
             s = raw
             # D5 quote strip (cef.rb:243-245), D6 chomp + newline guard (cef.rb:248-252)
             if s[:1] == '"':
@@ -408,7 +414,7 @@ def _decode_batch_pandas(texts: pd.Series, config: Optional[DecodeConfig] = None
     parts = s.str.extract(FULL_HEADER_PATTERN)
     header_fail = parts[0].isna() & ~nl_mask
     if header_fail.any():
-        counts = s[header_fail].map(_count_headers)
+        counts = s[header_fail].map(lambda t: _count_headers(t)[0])
         error[header_fail] = counts.map(
             lambda c: f"message is not valid CEF; found {c} of 7 required pipe-terminated header fields"
         )

@@ -79,10 +79,8 @@ def severity_lookup_df(spark: SparkSession) -> DataFrame:
 ROUTING_COLUMNS = ["deviceVendor", "severity", "error"]
 
 
-def decode(df: DataFrame, text_col: str = "text",
-           config: Optional[DecodeConfig] = None,
-           columns: Optional[list] = None) -> DataFrame:
-    return decode_dataframe(df, text_col=text_col, config=config, columns=columns)
+#: the decode stage is the one decode UDF boundary, under its pipeline name
+decode = decode_dataframe
 
 
 def enrich(decoded: DataFrame, spark: SparkSession) -> DataFrame:

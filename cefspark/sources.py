@@ -9,27 +9,25 @@ the reference's other ingestion shapes:
   because its input is an unframed byte stream; in Spark the framing is the
   scan's ``lineSep``, so the "buffer + flush" machinery dissolves into the
   source).
-* ``decode_binary_dataframe`` — ingest a BinaryType column: strict UTF-8
-  decode first; invalid byte sequences fail the event early exactly like
-  the reference (cef.rb:236-240, spec cef_spec.rb:996-1009). The failure
-  event's ``message`` holds a replacement-char rendering of the original
-  bytes (Spark strings cannot carry invalid bytes), and ``message_bytes``
-  carries the ORIGINAL raw bytes (BinaryType) so the reference's byte-exact
-  failure payload survives ingestion — the remaining deviation is
-  rendering-only.
+* ``decode_binary_dataframe`` — ingest a BinaryType column through the one
+  decode UDF (``udfs.decode_dataframe``). The parser does the strict UTF-8
+  decode (D4); invalid byte sequences fail the event early exactly like the
+  reference (cef.rb:236-240, spec cef_spec.rb:996-1009). The failure event's
+  ``message`` holds a replacement-char rendering of the original bytes
+  (Spark strings cannot carry invalid bytes), and ``message_bytes`` carries
+  the ORIGINAL raw bytes (BinaryType) so the reference's byte-exact failure
+  payload survives ingestion — the remaining deviation is rendering-only.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .mappings import PARSE_FAILURE_TAG
-from .parser import DECODED_COLUMNS, DecodeConfig, decode_batch
-from .udfs import DECODED_STRUCT
+from .parser import INVALID_UTF8_ERROR, DecodeConfig
+from .udfs import decode_dataframe
 
 
 def unescape_delimiter(delim: str) -> str:
@@ -93,48 +91,15 @@ def read_lines_charset(spark: SparkSession, path: str, charset: str,
 
 
 def decode_binary_dataframe(df: DataFrame, bytes_col: str = "payload",
-                            config: Optional[DecodeConfig] = None,
-                            flatten: bool = True) -> DataFrame:
-    """Decode CEF from a BinaryType column with strict UTF-8 validation."""
-    cfg = config or DecodeConfig()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = []
-            bad = []
-            raw = []
-            for b in pdf[bytes_col]:
-                if b is None:
-                    texts.append(None)
-                    bad.append(False)
-                    raw.append(None)
-                    continue
-                try:
-                    texts.append(bytes(b).decode("utf-8", errors="strict"))
-                    bad.append(False)
-                    raw.append(None)
-                except UnicodeDecodeError:
-                    texts.append(bytes(b).decode("utf-8", errors="replace"))
-                    bad.append(True)
-                    raw.append(bytes(b))  # byte-exact failure payload
-            dec = decode_batch(pd.Series(texts, index=pdf.index), cfg)
-            for pos, (i, is_bad) in enumerate(zip(pdf.index, bad)):
-                if is_bad:  # fail early like cef.rb:238-240, keep payload rendering
-                    for c in DECODED_COLUMNS:
-                        dec.at[i, c] = None
-                    dec.at[i, "message"] = texts[pos]
-                    dec.at[i, "tags"] = [PARSE_FAILURE_TAG]
-                    dec.at[i, "error"] = "invalid byte sequence in UTF-8"
-            out = pdf.copy()
-            for c in [f.name for f in DECODED_STRUCT.fields]:
-                out[c] = dec[c]
-            out["message_bytes"] = raw
-            yield out
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-    schema = StructType(df.schema.fields + DECODED_STRUCT.fields +
-                        [StructField("message_bytes", BinaryType())])
-    return df.mapInPandas(run, schema=schema)
+                            config: Optional[DecodeConfig] = None) -> DataFrame:
+    """Decode CEF from a BinaryType column with strict UTF-8 validation;
+    ``message_bytes`` keeps the original bytes of an invalid-UTF-8 event."""
+    dec = decode_dataframe(df, text_col=bytes_col, config=config)
+    # decode_dataframe keeps the input columns in place (a name colliding
+    # with a decoded column becomes _src_<name>), so look the payload up by position
+    payload = dec.columns[df.columns.index(bytes_col)]
+    return dec.withColumn("message_bytes", F.when(
+        F.col("error") == INVALID_UTF8_ERROR, F.col(payload)))
 
 
 TRANSCRIPT_SCHEMA_DDL = ("conv_id string, turn_idx int, role string, "

@@ -58,18 +58,16 @@ def _microbatch_starved(spark: SparkSession, path: str,
 
 
 def read_transcript_stream(spark: SparkSession, path: str,
-                           max_files_per_trigger: int = 16,
-                           fan_out: Optional[bool] = None) -> DataFrame:
+                           max_files_per_trigger: int = 16) -> DataFrame:
     """File-based streaming source over a transcript parquet directory.
 
-    ``fan_out`` hash-repartitions every micro-batch to the executor pool on
+    Fans out: hash-repartitions every micro-batch to the executor pool on
     the transcript identity ``(conv_id, turn_idx)`` — unique by contract, so
     the spread is even and needs no round-robin sort — before the CPU-bound
-    decode stage. Default ``None`` = automatic: fan out exactly when the
-    per-trigger file cap cannot feed ``defaultParallelism`` tasks
-    (:func:`_microbatch_starved`); a source whose triggers already carry
-    enough splits is left alone, so at cluster scale large batches are never
-    needlessly shuffled. Measured on the 2M-row bench lane (32 one-row-group
+    decode stage, exactly when the per-trigger file cap cannot feed
+    ``defaultParallelism`` tasks (:func:`_microbatch_starved`); a source
+    whose triggers already carry enough splits is left alone, so at cluster
+    scale large batches are never needlessly shuffled. Measured on the 2M-row bench lane (32 one-row-group
     files, 4 per trigger, local[32]): median batch 2.6 s -> 1.95 s, drain
     throughput +~50%. Results are partitioning-independent (windowed counts
     and keyed state re-shuffle by key regardless); only task placement
@@ -77,9 +75,7 @@ def read_transcript_stream(spark: SparkSession, path: str,
     stream = (spark.readStream.schema(TRANSCRIPT_DDL)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(path))
-    if fan_out is None:
-        fan_out = _microbatch_starved(spark, path, max_files_per_trigger)
-    if fan_out:
+    if _microbatch_starved(spark, path, max_files_per_trigger):
         stream = stream.repartition(spark.sparkContext.defaultParallelism,
                                     F.col("conv_id"), F.col("turn_idx"))
     return stream
@@ -428,90 +424,3 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
             & (F.col(rts) >= F.col(left_ts))
             & (F.col(rts) <= F.col(left_ts) + F.expr(f"interval {lag}")))
     return l.join(r, cond, how)
-
-
-def run_counts_to_table(spark: SparkSession, input_path: str, table,
-                        checkpoint: str, query_name: str = "counts_to_table",
-                        config: Optional[DecodeConfig] = None,
-                        watermark: str = "10 minutes",
-                        window: str = "1 hour",
-                        max_files_per_trigger: int = 16):
-    """The COMPLETE streaming production loop in one call: transcript
-    stream → decode → enrich → route → watermarked windowed per-sink
-    counts (APPEND mode: a window emits exactly once, when the watermark
-    closes it) → exactly-once ManifestTable commit per micro-batch.
-
-    Append mode + the batch-token ledger compose into an end-to-end
-    exactly-once COUNTS table: every closed (sink, window) row is
-    committed exactly once across any number of restarts — the streaming
-    twin of jobs/run_pipeline.py's batch counts commit, resumable from
-    ``checkpoint``. Windows still open at drain end (those newer than
-    ``max(ts) - watermark``) are NOT emitted — they commit when later data
-    (or a later run) closes them; consumers read the table as
-    append-only history."""
-    stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
-    counts = windowed_sink_counts(routed_stream(stream, spark, config),
-                                  watermark, window)
-    return exactly_once_sink(counts, table, query_name, checkpoint)
-
-
-
-def run_failures_to_dlq(spark: SparkSession, input_path: str, dlq_table,
-                        checkpoint: str, query_name: str = "failures_to_dlq",
-                        config: Optional[DecodeConfig] = None,
-                        source_tag: str | None = None,
-                        max_files_per_trigger: int = 16):
-    """Streaming dead-letter lane: transcript stream → decode → the
-    PARSE FAILURES quarantined into ``dlq_table``, exactly once.
-
-    The batch side of the same contract lives in cefspark.dlq — this
-    reuses its idempotent :func:`cefspark.dlq.quarantine` inside
-    ``foreachBatch`` with the batch id as the ledger tag, so checkpoint
-    replay after a crash re-offers the same deterministic batch and the
-    ledger turns the at-least-once replay into exactly-once (identical
-    scheme to :func:`exactly_once_sink`, distinct token namespace:
-    ``dlq://<tag>/batch/<id>``). Run it beside ``run_counts_to_table``
-    over the same input directory (each with its OWN checkpoint) and the
-    production loop has both lanes: closed windows append to the counts
-    table, failures accumulate in the queue for fix-and-replay.
-
-    Scale: the quarantined relation is the failure subset only; the
-    filter runs inside the micro-batch before any write."""
-    from . import dlq as _dlq
-
-    tag = source_tag or query_name
-    stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
-    dec = decode_dataframe(stream, config=config)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _dlq.quarantine(batch_df, dlq_table, f"{tag}/batch/{batch_id}")
-
-    return (dec.writeStream.foreachBatch(_write)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
-
-
-def windowed_unique_counts(stream: DataFrame, key_col: str = "sink_id",
-                           id_col: str = "conv_id",
-                           ts_col: str = "ts",
-                           watermark: str = "10 minutes",
-                           window: str = "1 hour",
-                           rsd: float = 0.05) -> DataFrame:
-    """Streaming per-key windowed APPROXIMATE DISTINCT counts
-    (HyperLogLog++ via ``approx_count_distinct``): "how many distinct
-    conversations hit each sink per hour" without holding the id set in
-    state — the sketch is the state, constant-size per (key, window)
-    regardless of cardinality. That bound is the whole point at 10^12
-    turns: an exact distinct would keep every id in the state store.
-
-    HLL++ hashes deterministically and merges order-independently, so
-    the streamed result equals the batch ``approx_count_distinct`` over
-    the same rows at the same ``rsd`` — pinned in pytest across
-    multi-batch availableNow drains."""
-    return (stream.withWatermark(ts_col, watermark)
-            .groupBy(key_col, F.window(ts_col, window).alias("w"))
-            .agg(F.approx_count_distinct(id_col, rsd).alias("n_unique"))
-            .select(key_col, F.col("w.start").alias("window_start"),
-                    "n_unique"))

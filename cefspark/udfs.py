@@ -19,31 +19,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, MapType, StringType, StructField,
-                               StructType, TimestampType)
+                               StructType)
 
 from .encoder import EncoderConfig, encode_batch
-from .parser import DecodeConfig, decode_batch
+from .parser import DECODED_COLUMNS, DecodeConfig, decode_batch
 
 #: Decoded-event struct: fixed physical columns for the 7 headers (CEF long
 #: names; ECS naming is a view over these), the syslog prelude, one map column
 #: for the open-ended extension space (unknown keys are first-class,
-#: cef_spec.rb:916-924), and error-as-data failure columns.
-DECODED_STRUCT = StructType([
-    StructField("cefVersion", StringType()),
-    StructField("deviceVendor", StringType()),
-    StructField("deviceProduct", StringType()),
-    StructField("deviceVersion", StringType()),
-    StructField("deviceEventClassId", StringType()),
-    StructField("name", StringType()),
-    StructField("severity", StringType()),
-    StructField("syslog", StringType()),
-    StructField("extensions", MapType(StringType(), StringType())),
-    StructField("message", StringType()),
-    StructField("tags", ArrayType(StringType())),
-    StructField("error", StringType()),
-])
-
-_DECODE_OUT_COLS = [f.name for f in DECODED_STRUCT.fields]
+#: cef_spec.rb:916-924), and error-as-data failure columns. Field names and
+#: order are parser.DECODED_COLUMNS; every field but these two is a string.
+_DECODED_TYPES = {"extensions": MapType(StringType(), StringType()),
+                  "tags": ArrayType(StringType())}
+DECODED_STRUCT = StructType([StructField(c, _DECODED_TYPES.get(c, StringType()))
+                             for c in DECODED_COLUMNS])
 
 
 def make_decode_udf(config: Optional[DecodeConfig] = None,
@@ -62,9 +51,9 @@ def make_decode_udf(config: Optional[DecodeConfig] = None,
         # copy before pinning: never mutate the caller's (possibly reused) config
         cfg = dataclasses.replace(cfg, now=pd.Timestamp.now(tz="UTC").isoformat())
     if columns is None:
-        out_cols, schema = _DECODE_OUT_COLS, DECODED_STRUCT
+        out_cols, schema = DECODED_COLUMNS, DECODED_STRUCT
     else:
-        unknown = set(columns) - set(_DECODE_OUT_COLS)
+        unknown = set(columns) - set(DECODED_COLUMNS)
         if unknown:
             raise ValueError(f"unknown decode columns: {sorted(unknown)}")
         # fields keep DECODED_STRUCT order regardless of request order
@@ -93,18 +82,19 @@ def decode_dataframe(df: DataFrame, text_col: str = "text",
                      columns: Optional[list] = None) -> DataFrame:
     """Decode ``df[text_col]`` CEF payloads; appends the decoded columns.
 
-    The UDF's struct is expanded into top-level columns — Catalyst prunes
-    unused ones and the UDF boundary stays a single projection stage.
+    ``text_col`` may be a string or a binary column (binary payloads are
+    validated as UTF-8 by the parser, D4). The UDF's struct is expanded into
+    top-level columns — Catalyst prunes unused ones and the UDF boundary
+    stays a single projection stage.
     """
     udf = make_decode_udf(config, columns)
-    out_names = {f.name for f in DECODED_STRUCT.fields} if columns is None else set(columns)
-    if config is not None and config.raw_data_field:
-        out_names = out_names | {config.raw_data_field}
+    out_names = set(udf.returnType.names) | {"cef"}
     src = df
     in_text = text_col
     # avoid ambiguous references when the input already carries columns
     # named like decoded fields (message/name/severity/... are common
-    # log-schema names): input collisions are preserved under _src_<name>
+    # log-schema names) or like the transient struct column "cef": input
+    # collisions are preserved under _src_<name>
     for c in [c for c in df.columns if c in out_names]:
         src = src.withColumnRenamed(c, f"_src_{c}")
         if c == text_col:  # the payload column itself may collide
@@ -161,7 +151,7 @@ def ecs_timestamp(col: Column) -> Column:
 #: carries all 9 fractional digits — this column preserves full parity for
 #: sub-microsecond producers. Pure built-ins (whole-stage codegen, no UDF).
 def ecs_timestamp_ns(col: Column) -> Column:
-    micro_ts = F.to_timestamp(F.regexp_replace(col, r"(\.\d{6})\d{3}Z$", "$1Z"))
+    micro_ts = ecs_timestamp(col)
     sub_us = F.regexp_extract(col, r"\.\d{6}(\d{3})Z$", 1).cast("long")
     return (F.unix_micros(micro_ts) * F.lit(1000).cast("long")
             + F.coalesce(sub_us, F.lit(0))).cast("long")

@@ -1439,89 +1439,6 @@ def test_video_motion_features_closed_form(spark):
     assert out["swap"]["n_frames"] == 2
 
 
-def test_run_counts_to_table_streaming_loop(spark, tmp_path):
-    """The full streaming production loop: decode -> route -> watermarked
-    windowed counts (append) -> exactly-once ManifestTable. Closed windows
-    commit exactly once with complete counts; a resumed run over later
-    data commits only newly-closed windows.
-
-    Append-mode mechanics make the expected set deterministic: after the
-    last data batch an availableNow drain runs a final no-data batch with
-    the advanced watermark, so each phase commits exactly the windows with
-    window_end + watermark_delay <= max(ts drained so far). The fixture
-    spans 1200 s, so the gate's production 1h/10min defaults never close
-    a window in-test; we shrink to 2min windows / 1min watermark (the
-    function's parameters exist precisely for this) and pick split points
-    where end + delay == cutoff ties are impossible."""
-    import datetime
-    import time as _time
-
-    from cefspark import fixtures, pipeline
-    from cefspark.storage import ManifestTable
-    from cefspark.udfs import decode_dataframe
-
-    t = fixtures.transcripts_df(spark, 1200).cache()
-    all_ts = sorted(r["ts"] for r in t.select("ts").collect())
-    med = all_ts[len(all_ts) // 2]
-    early_ts = [x for x in all_ts if x < med]
-    e1 = early_ts[len(early_ts) // 3]
-    e2 = early_ts[2 * len(early_ts) // 3]
-    late_ts = [x for x in all_ts if x >= med]
-    lm = late_ts[len(late_ts) // 2]
-
-    src = str(tmp_path / "ctt_in")
-    table = ManifestTable(str(tmp_path / "ctt_table"))
-    ckpt = str(tmp_path / "ctt_ckpt")
-
-    def write_slice(lo, hi, mode):
-        (t.where((F.col("ts") >= F.lit(lo)) if lo else F.lit(True))
-         .where(F.col("ts") < F.lit(hi))
-         .coalesce(1).write.mode(mode).parquet(src))
-        _time.sleep(1.1)   # distinct mtimes: files must drain in time order
-
-    write_slice(None, e1, "overwrite")
-    write_slice(e1, e2, "append")
-    write_slice(e2, med, "append")
-
-    def drain():
-        q = streaming.run_counts_to_table(spark, src, table, ckpt,
-                                          watermark="1 minute",
-                                          window="2 minutes",
-                                          max_files_per_trigger=1)
-        q.awaitTermination(240)
-
-    def expected_closed(cutoff):
-        routed = pipeline.route(pipeline.enrich(decode_dataframe(t), spark))
-        counts = (routed.groupBy("sink_id",
-                                 F.window("ts", "2 minutes").alias("w"))
-                  .agg(F.count(F.lit(1)).alias("n"))
-                  .select("sink_id", F.col("w.start").alias("ws"),
-                          F.col("w.end").alias("we"), "n"))
-        return {(r["sink_id"], r["ws"]): r["n"] for r in counts.collect()
-                if r["we"] + datetime.timedelta(minutes=1) <= cutoff}
-
-    drain()
-    got1 = {(r["sink_id"], r["window_start"]): r["n_events"]
-            for r in table.read_union(spark).collect()}
-    cutoff1 = max(x for x in early_ts)             # max ts drained, phase 1
-    assert got1 == expected_closed(cutoff1)
-    assert got1, "no closed windows in phase 1"
-
-    # later data arrives as two more time-ordered files; the resumed run
-    # commits ONLY the newly-closed windows, with complete counts
-    write_slice(med, lm, "append")
-    (t.where(F.col("ts") >= F.lit(lm)).coalesce(1)
-     .write.mode("append").parquet(src))
-    drain()
-    rows = table.read_union(spark).collect()
-    got2 = {(r["sink_id"], r["window_start"]): r["n_events"] for r in rows}
-    assert len(rows) == len(got2), "a (sink, window) committed twice"
-    cutoff2 = max(all_ts)                          # max ts drained, phase 2
-    assert got2 == expected_closed(cutoff2)
-    assert len(got2) > len(got1)
-    t.unpersist()
-
-
 def test_dedup_stream_drops_redelivered_rows(spark, tmp_path):
     """Streaming exact dedup over an at-least-once file source: the input
     is delivered twice (full re-send in a later file, plus intra-file
@@ -1552,97 +1469,6 @@ def test_dedup_stream_drops_redelivered_rows(spark, tmp_path):
     assert {(r["conv_id"], r["turn_idx"]) for r in got} == \
         {(r["conv_id"], r["turn_idx"]) for r in t.collect()}
     t.unpersist()
-
-
-def test_run_failures_to_dlq_streaming_lane(spark, tmp_path):
-    """Streaming dead-letter lane: decode failures quarantine exactly once
-    across micro-batches; checkpoint resume with no new data adds nothing;
-    the queue then replays through the batch dlq API."""
-    import datetime as dt
-
-    from cefspark import dlq
-    from cefspark.storage import ManifestTable
-
-    base = dt.datetime(2026, 1, 1)
-    rows = []
-    for i in range(40):
-        text = (f"CEF:0|v|p|1|s|n|5|src=10.0.0.{i}" if i % 4
-                else f"broken line {i}")
-        rows.append((f"c{i}", 0, "user", text, "", base))
-    df = spark.createDataFrame(rows, streaming.TRANSCRIPT_DDL)
-    src = str(tmp_path / "dlq_in")
-    df.where("conv_id like 'c1%' or conv_id like 'c2%'").coalesce(1) \
-        .write.parquet(src)
-    df.where("not (conv_id like 'c1%' or conv_id like 'c2%')").coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    table = ManifestTable(str(tmp_path / "dlq_table"))
-    ckpt = str(tmp_path / "dlq_ckpt")
-    q = streaming.run_failures_to_dlq(spark, src, table, ckpt,
-                                      max_files_per_trigger=1)
-    q.awaitTermination(120)
-
-    expected = {f"broken line {i}" for i in range(0, 40, 4)}
-    queue = table.read_union(spark)
-    assert {r["payload"] for r in queue.collect()} == expected
-    assert queue.count() == len(expected)          # exactly once
-    n_snaps = len(table.chain())
-    assert n_snaps == 2                            # one per micro-batch
-
-    # resume from the checkpoint with no new data: no new snapshots
-    q2 = streaming.run_failures_to_dlq(spark, src, table, ckpt,
-                                       max_files_per_trigger=1)
-    q2.awaitTermination(120)
-    assert len(table.chain()) == n_snaps
-    assert table.read_union(spark).count() == len(expected)
-
-    # the streamed queue replays through the batch API (all unfixable here)
-    recovered, still = dlq.replay(spark, table)
-    assert recovered.count() == 0 and still.count() == len(expected)
-
-
-def test_windowed_unique_counts_stream_equals_batch(spark, tmp_path):
-    """HLL++ windowed distinct counts: the streamed (multi-batch) result
-    equals the batch approx_count_distinct over the same rows — the
-    sketch merges order-independently, so micro-batching is invisible."""
-    import datetime as dt
-
-    base = dt.datetime(2026, 3, 1)
-    rows = []
-    for i in range(300):
-        rows.append((f"conv-{i % 57}", 0, "user",
-                     f"CEF:0|v{i % 3}|p|1|s|n|5|src=10.0.0.{i % 9}", "",
-                     base + dt.timedelta(minutes=i)))
-    df = spark.createDataFrame(rows, streaming.TRANSCRIPT_DDL)
-    src = str(tmp_path / "uq_in")
-    # two files split by time so availableNow drains >= 2 micro-batches
-    df.where(F.col("ts") < base + dt.timedelta(minutes=150)) \
-        .coalesce(1).write.parquet(src)
-    df.where(F.col("ts") >= base + dt.timedelta(minutes=150)) \
-        .coalesce(1).write.mode("append").parquet(src)
-
-    stream = (spark.readStream.schema(streaming.TRANSCRIPT_DDL)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    routed = streaming.routed_stream(stream, spark)
-    uq = streaming.windowed_unique_counts(routed)
-    q = (uq.writeStream.format("memory").queryName("uq_mem")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r["sink_id"], r["window_start"]): r["n_unique"]
-           for r in spark.table("uq_mem").collect()}
-
-    from cefspark.pipeline import enrich, route
-    from cefspark.udfs import decode_dataframe as _dec
-    batch = route(enrich(_dec(df), spark))
-    exp = {(r["sink_id"], r["window_start"]): r["n_unique"]
-           for r in batch.groupBy(
-               "sink_id", F.window("ts", "1 hour").alias("w"))
-           .agg(F.approx_count_distinct("conv_id", 0.05).alias("n_unique"))
-           .select("sink_id", F.col("w.start").alias("window_start"),
-                   "n_unique").collect()}
-    assert got == exp and len(got) > 0
-    # sanity: windows genuinely aggregate multiple distinct conversations
-    assert max(got.values()) > 1
 
 
 def test_binary_codec_decode_streams_equal_batch(spark, tmp_path):

@@ -507,8 +507,7 @@ def test_scan_metadata_cache_reinfers_after_overwrite(spark, tmp_path):
 def test_stream_microbatch_fanout_rule(spark, tmp_path):
     """r7: the streaming micro-batch fan-out must fire exactly when the
     per-trigger file cap times row-groups-per-file cannot feed the pool,
-    must be a hash repartition on the transcript identity, and must honor
-    an explicit fan_out override."""
+    and must be a hash repartition on the transcript identity."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -539,7 +538,6 @@ def test_stream_microbatch_fanout_rule(spark, tmp_path):
     plan = logical(fanned)
     assert "RepartitionByExpression" in plan
     assert "conv_id" in plan and "turn_idx" in plan
-    plain = streaming.read_transcript_stream(spark, str(one), 1, fan_out=False)
-    assert "RepartitionByExpression" not in logical(plain)
-    forced = streaming.read_transcript_stream(spark, str(many), 1, fan_out=True)
-    assert "RepartitionByExpression" in logical(forced)
+    # enough row groups per trigger: the same call plans no repartition
+    assert "RepartitionByExpression" not in logical(
+        streaming.read_transcript_stream(spark, str(many), 1))

@@ -46,6 +46,35 @@ def test_binary_ingest_valid_and_invalid_utf8(spark):
     assert out[3]["error"] == "null payload"
 
 
+def test_binary_ingest_keeps_raw_data_field(spark):
+    # D3 raw capture rides the binary path too: the decoded str on success
+    from cefspark.parser import DecodeConfig
+
+    df = spark.createDataFrame([(1, CANON.encode()), (2, b"\xffbad")],
+                               "id int, payload binary")
+    dec = sources.decode_binary_dataframe(df, config=DecodeConfig(raw_data_field="raw"))
+    assert dec.columns[-2:] == ["raw", "message_bytes"]
+    out = {r["id"]: r for r in dec.collect()}
+    assert out[1]["raw"] == CANON and out[1]["error"] is None
+    assert out[2]["raw"] is None and out[2]["message_bytes"] == b"\xffbad"
+
+
+def test_binary_ingest_renames_colliding_input_columns(spark):
+    # input columns named like decoded fields survive as _src_<name>, the
+    # payload column among them, as decode_dataframe does for text
+    df = spark.createDataFrame([(1, "low", CANON.encode()), (2, "high", b'"\xff"')],
+                               "id int, severity string, message binary")
+    dec = sources.decode_binary_dataframe(df, bytes_col="message")
+    assert dec.columns[:3] == ["id", "_src_severity", "_src_message"]
+    assert dec.columns[-1] == "message_bytes"
+    out = {r["id"]: r for r in dec.collect()}
+    assert (out[1]["_src_severity"], out[1]["severity"]) == ("low", "10")
+    assert out[1]["message"] is None and out[1]["message_bytes"] is None
+    assert out[2]["error"] == "invalid byte sequence in UTF-8"
+    assert out[2]["message"] == '"\ufffd"'
+    assert out[2]["message_bytes"] == b'"\xff"' == out[2]["_src_message"]
+
+
 def test_read_raw_lines_over_multi_file_directory(spark, tmp_path):
     # distributed framing: each part file is an independent byte stream;
     # frames never span files, and the union covers every frame exactly once

@@ -154,10 +154,12 @@ def test_run_pipeline_end_to_end(spark, transcripts, tmp_path):
 
 def test_decode_flatten_renames_colliding_input_columns(spark):
     src = spark.createDataFrame(
-        [("CEF:0|v|p|1|s|n|5|k=v", "preexisting")], "text string, message string")
+        [("CEF:0|v|p|1|s|n|5|k=v", "preexisting", "kept")],
+        "text string, message string, cef string")
     out = decode_dataframe(src)
     row = out.first()
     assert row["_src_message"] == "preexisting"
+    assert row["_src_cef"] == "kept"  # not replaced by the transient struct
     assert row["message"] is None  # decoded failure-message column, success row
     # unambiguous reference works
     assert out.select(F.col("message")).count() == 1

@@ -11,7 +11,7 @@ import sys
 import pandas as pd
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
-from cefspark.parser import DecodeConfig, _decode_batch_fast, _decode_batch_pandas  # noqa: E402
+from cefspark.parser import DecodeConfig, _decode_batch_pandas, decode_batch  # noqa: E402
 
 ALPHABET = string.ascii_letters + string.digits + " |\\=._-:/[]\n\r\"\t\x00" + "é 中"
 
@@ -43,7 +43,7 @@ def main() -> int:
         payloads = [rand_payload(rng) for _ in range(batch)]
         s = pd.Series(payloads)
         for cfg in (DecodeConfig(), DecodeConfig(ecs_mode=True, now="2026-08-16T00:00:00Z")):
-            fast = _decode_batch_fast(s, cfg)
+            fast = decode_batch(s, cfg)
             slow = _decode_batch_pandas(s, cfg)
             for col in fast.columns:
                 fv, sv = fast[col], slow[col]
